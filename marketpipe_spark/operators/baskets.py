@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import pin
+
 MICRO = 1_000_000
 
 
@@ -205,14 +207,13 @@ def association_rules(
     still spells out, so parity doubles as an equivalence proof of the
     rewrite); then one hash agg per statistic and a top-N TakeOrdered.
     """
-    from ..operators.dedup import _pin
 
     # `arrays` feeds three consumers (item counts, the basket count, the
     # pair enumeration): unpinned, the capped-basket window pass ran once
     # per consumer (4 scans in basket_rules' physical plan). The count()
     # below doubles as the pin's eager materialization, so the two lazy
     # consumers read the pinned blocks. Cap-bounded rows: the pin is small.
-    arrays = _pin(arrays)
+    arrays = pin(arrays)
     item_cnt = (
         arrays.select(F.explode("items").alias("item"))
         .groupBy("item")

@@ -20,210 +20,13 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import broadcast_state, pin, pin_all, pin_keyed, pin_state, pinned, spread
+
 TOKEN_SPLIT_RE = r"\s+"
-
-
-def _pin_mode() -> str:
-    """Current pin mode: ``local`` (default) | ``persist`` | ``reliable`` |
-    ``off``.
-
-    ``off`` makes :func:`_pin` the identity — used by the zero-jobs-at-build
-    hygiene test: under AQE, even a LAZY ``localCheckpoint`` executes the
-    pin's upstream shuffle stages at plan-build time (AdaptiveSparkPlanExec
-    must finalize the plan to hand back an RDD), so pinned builders legally
-    run their pin jobs at build. With pins off, builders must run ZERO jobs
-    — which keeps the original guard against redundant eager ``.count()``
-    scans sharp. NOT a bench knob: the pins' work is part of the query and
-    is timed either way (the bench times build + execute together)."""
-    return os.environ.get("MP_PIN_MODE", "local")
-
-
-def _ensure_checkpoint_dir(spark) -> None:
-    """Make sure a RELIABLE checkpoint dir is set before ``df.checkpoint()``.
-
-    ``MP_CHECKPOINT_DIR`` names the directory (on a real cluster: an HDFS /
-    object-store path so the blocks survive ANY executor loss); absent that,
-    a process-local temp dir is created — still reliable against executor
-    JVM loss in local-cluster mode because the DRIVER-side filesystem holds
-    the files, which is exactly the failure domain the fault experiment
-    kills.
-    """
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        d = os.environ.get("MP_CHECKPOINT_DIR")
-        if not d:
-            import tempfile
-
-            d = tempfile.mkdtemp(prefix="mp-reliable-ckpt-")
-        sc.setCheckpointDir(d)
-
-
-def _pin(df: DataFrame, scope: list | None = None) -> DataFrame:
-    """Materialize a frame that feeds several plan branches.
-
-    Default is ``localCheckpoint(eager=False)``: truncates lineage and keeps
-    blocks on executor-local storage — the cheapest pin, but those blocks are
-    NOT recoverable if an executor is lost mid-job. ``MP_PIN_MODE`` picks the
-    reliability trade instead:
-
-    - ``persist``: ``persist(DISK_ONLY)`` — lineage is KEPT, so a lost block
-      recomputes instead of failing the job (the ADVICE r4 trade).
-    - ``reliable``: ``df.checkpoint()`` to ``MP_CHECKPOINT_DIR``
-      (``sparkContext.setCheckpointDir``) — lineage is truncated AND the
-      blocks live on driver-side / shared storage, so they survive executor
-      loss outright (the standard long-job fix on real clusters, VERDICT r6
-      #1).
-
-    ``scope``: persist-mode pins are registered here so the caller can
-    :func:`_release` them when its loop finishes — without it, repeated
-    operator invocations in one long session accumulate DISK_ONLY blocks
-    indefinitely (ADVICE r6).
-    """
-    mode = _pin_mode()
-    if mode == "off":
-        return df
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        if scope is not None:
-            scope.append(out)
-        return out
-    if mode == "reliable":
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
-def _pin_parallel(*dfs: DataFrame, scope: list | None = None) -> list[DataFrame]:
-    """Pin several INDEPENDENT frames with their jobs overlapped (guide
-    §2.6: Spark's scheduler runs concurrent jobs happily; actions are only
-    sequential because driver code calls them sequentially).
-
-    ``_pin``'s expensive part runs inside the call itself: under AQE,
-    ``localCheckpoint``/``checkpoint`` go through ``queryExecution.toRdd``,
-    which finalizes the adaptive plan by EXECUTING the subtree's shuffle
-    stages as jobs. Two independent pins called sequentially therefore
-    serialize two multi-stage jobs, each with a straggler tail and
-    driver-side AQE latency the other could back-fill. Calling them from a
-    small thread pool lets the second pin's tasks fill executor slots the
-    first pin's tail leaves idle.
-
-    Only for frames with NO dependency between them (a pin whose input is
-    another pin in the same call would deadlock nothing, but would also
-    overlap nothing). Results are identical to sequential ``_pin`` calls —
-    same frames, same blocks, order preserved in the returned list. Under
-    ``MP_PIN_MODE=off`` this is the identity map with no threads and no
-    jobs (the zero-jobs-at-build hygiene gate stays sharp).
-
-    ``MP_PIN_PARALLEL=0`` forces the sequential path — the measurement
-    knob the interleaved A/B flips so both arms run in one JVM."""
-    if (
-        _pin_mode() == "off"
-        or len(dfs) <= 1
-        or os.environ.get("MP_PIN_PARALLEL", "1") == "0"
-    ):
-        return [_pin(df, scope=scope) for df in dfs]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(len(dfs), 4)) as ex:
-        return list(ex.map(lambda d: _pin(d, scope=scope), dfs))
-
-
-def _pin_keyed(df: DataFrame, *keys: str, scope: list | None = None) -> DataFrame:
-    """Pin a loop-invariant frame, co-partitioned on its per-round join key.
-
-    localCheckpoint surfaces as ``Scan ExistingRDD`` with UNKNOWN output
-    partitioning, so EnsureRequirements re-exchanges BOTH sides of every
-    round's join no matter how the frame was partitioned before the pin
-    (measured — see the pagerank source note). ``persist`` keeps the plan's
-    outputPartitioning, so under ``MP_PIN_MODE=persist`` this repartitions
-    on ``keys`` ONCE and every subsequent round's shuffle join finds this
-    side's distribution requirement already satisfied: the per-round
-    exchange on the big pinned side disappears (the node-sized state side
-    still exchanges — that's the cheap side). In the default local mode the
-    extra repartition would buy nothing (localCheckpoint forgets it), so
-    it is skipped and this is exactly :func:`_pin` — as it is under
-    ``reliable``, where ``df.checkpoint()`` likewise surfaces with unknown
-    partitioning (reliability mode trades the co-partitioning win for
-    executor-loss survival).
-    """
-    if _pin_mode() == "persist":
-        from pyspark import StorageLevel
-
-        out = df.repartition(*[F.col(k) for k in keys]).persist(
-            StorageLevel.DISK_ONLY
-        )
-        if scope is not None:
-            scope.append(out)
-        return out
-    return _pin(df)
-
-
-def _pin_state(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Pin per-round loop STATE (scores / labels / frontiers / distances).
-
-    State must truncate lineage EVERY round in every mode — a
-    lineage-keeping pin would nest each round's plan into the next
-    (measured in khop: per-round stage count ballooned 9 -> 21). Modes:
-
-    - ``local`` / ``persist``: ``localCheckpoint`` — cheapest truncation,
-      executor-local blocks. This is the r6-documented reliability window:
-      even under ``persist`` (which protects the loop-INVARIANT frames) a
-      kill landing while a round's state blocks live only on the victim is
-      unrecoverable.
-    - ``reliable``: ``df.checkpoint()`` — truncation to RELIABLE storage;
-      no timing window (the fault-experiment sweep is the proof).
-    """
-    if _pin_mode() == "reliable":
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
-def _release(scope: list) -> None:
-    """Unpersist every persist-mode pin registered in ``scope``.
-
-    Call when a loop's RESULT is already materialized (eager final state
-    pin): the invariant frames' cached blocks are no longer needed, and
-    leaving them would accumulate across operator invocations in a
-    long-lived session (ADVICE r6). Safe in persist mode because lineage
-    is kept — an unpersisted frame referenced again merely recomputes.
-    No-op entries from other modes never land in ``scope``.
-    """
-    for df in scope:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    scope.clear()
-
-
-#: Iterative loops join a big pinned frame against NODE-sized per-round
-#: state that comes out of a localCheckpoint with unknown statistics — the
-#: planner would SortMergeJoin the big side every round. Below this cap the
-#: state is broadcast-hinted instead (measured: 4 exchanges + 2 sorts per
-#: round -> 1 exchange); beyond it (hundreds of MB of state) the loops fall
-#: back to plain shuffle joins. Results identical either way.
-BROADCAST_STATE_MAX_NODES = 5_000_000
-
-
-def _state(df: DataFrame, n_nodes: int) -> DataFrame:
-    """Broadcast-hint a node-sized per-round state frame when small.
-
-    ``MP_BROADCAST_STATE_MAX_NODES`` overrides the gate at runtime (set it
-    to 0 to force the shuffle fallback — how the plan probe and the scale
-    bench exercise the above-gate path without a 5M-node graph)."""
-    gate = int(
-        os.environ.get("MP_BROADCAST_STATE_MAX_NODES", BROADCAST_STATE_MAX_NODES)
-    )
-    return F.broadcast(df) if n_nodes <= gate else df
 
 
 def _hash64(col: Column, seed: int | None, family: str) -> Column:
@@ -377,7 +180,6 @@ def minhash_signatures(
     coarsely-partitioned input is redistributed first (no-op once the scan
     yields enough splits).
     """
-    from .similarity import spread
 
     docs = spread(docs, id_col)
     sh = with_shingles(docs, text_col, k=k).select(id_col, "shingles")
@@ -453,7 +255,7 @@ def lsh_candidate_pairs(
     Pinning ``banded`` (narrow ``(id, band_id, band_hash)`` rows, n×bands of
     them) computes signatures once; executor-local disk bounds memory.
     """
-    banded = _pin(_banded_sigs(signatures, id_col, bands, rows_per_band, hash_family))
+    banded = pin(_banded_sigs(signatures, id_col, bands, rows_per_band, hash_family))
 
     sizes = banded.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
     # The CAPPED frame feeds both self-join sides: without its own pin the
@@ -465,7 +267,7 @@ def lsh_candidate_pairs(
     # they are dropped before the pin: less pinned I/O and smaller join
     # sides, same pair set. (Bipartite cap sites must NOT do this — a
     # singleton train bucket still matches test rows.)
-    banded = _pin(
+    banded = pin(
         banded.join(
             sizes.filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket)),
             ["band_id", "band_hash"],
@@ -501,11 +303,10 @@ def minhash_near_duplicates(
     and tokenization (regex split + k-gram assembly) is the dominant CPU of
     the pipeline. At cluster scale this is the standard "persist the shingle
     table between stages" design; executor-local disk bounds memory."""
-    from .similarity import spread
 
     docs = spread(docs, id_col)
     rows_per_band = num_perm // bands
-    sh_base = _pin(
+    sh_base = pin(
         with_shingles(docs, text_col, k).select(F.col(id_col), F.col("shingles"))
     )
     sigs = _signatures_from_shingles(sh_base, id_col, num_perm, hash_family)
@@ -549,11 +350,10 @@ def containment_pairs(
     the corpus by size band and run per-band — this operator is the
     single-pass screen for comparably-sized excerpts.
     """
-    from .similarity import spread
 
     docs = spread(docs, id_col)
     rows_per_band = num_perm // bands
-    sh_base = _pin(
+    sh_base = pin(
         with_shingles(docs, text_col, k).select(F.col(id_col), F.col("shingles"))
     )
     sigs = _signatures_from_shingles(sh_base, id_col, num_perm, hash_family)
@@ -624,7 +424,6 @@ def minhash_incremental_pairs(
     anti-joined away before the union, so retries are idempotent — the
     store never accumulates duplicate rows and pairs are emitted once.
     """
-    from .similarity import spread
 
     k = 3  # shingle length — must match minhash_signatures' default below
     new_docs = spread(new_docs, id_col)
@@ -638,7 +437,7 @@ def minhash_incremental_pairs(
     # sigs_new is just "new docs with >= k tokens" (with_shingles' filter),
     # derivable without any shingling/hashing — so key the anti-join on
     # that cheap filter instead, which makes the two pins INDEPENDENT and
-    # lets _pin_parallel overlap their jobs (guide §2.6: the small new-side
+    # lets pin_all overlap their jobs (the small new-side
     # pass back-fills the store pass's straggler tail). all_sigs then needs
     # no pin of its own: it is a lazy UNION of two pinned frames, so each
     # of its five consumers (bucket sizes, b-side, both verify sides, the
@@ -650,7 +449,7 @@ def minhash_incremental_pairs(
     store_leg_plan = known_sigs.select(id_col, "sig").join(
         new_ids, id_col, "left_anti"
     )
-    sigs_new, store_leg = _pin_parallel(sigs_new_plan, store_leg_plan)
+    sigs_new, store_leg = pin_all(sigs_new_plan, store_leg_plan)
     all_sigs = store_leg.unionByName(sigs_new.select(id_col, "sig"))
     rows_per_band = num_perm // bands
     # NOT pinned (measured): the band explode and the bucket-size agg are
@@ -707,7 +506,6 @@ def simhash(
     """SimHash per document: per-token hash bits vote ±1; the sign of each
     bit-position sum forms the fingerprint. Wide aggregation, all JVM.
     (``md5_60`` family yields a 60-bit hash — pass bits=60 with it.)"""
-    from .similarity import spread
 
     docs = spread(docs, id_col)
     toks = docs.select(
@@ -759,7 +557,7 @@ def simhash_near_duplicates(
     # tokenize + per-bit vote aggregation behind the fingerprints ran twice
     # (4 scans in simhash_near_dup's physical plan). The pin is n_docs ×
     # chunks narrow rows — bounded, vs a full corpus pass per consumer.
-    blocked = _pin(
+    blocked = pin(
         fps.select(F.col(id_col), F.col("simhash"), F.explode(chunk_structs).alias("ck")).select(
             id_col, "simhash", F.col("ck.chunk_id").alias("chunk_id"), F.col("ck.chunk_val").alias("chunk_val")
         )
@@ -792,7 +590,6 @@ def ngram_jaccard_pairs(
     """All pairs with shingle-set Jaccard ≥ threshold via inverted-index
     self-join on shingles. ``max_df`` drops shingles appearing in more than
     that many docs (stopword-shingle skew guard for web-scale corpora)."""
-    from .similarity import spread
 
     docs = spread(docs, id_col)
     # Join on the 64-bit shingle hash, not the string: ~3× less shuffle and a
@@ -804,7 +601,7 @@ def ngram_jaccard_pairs(
     # Three consumers below (doc sizes, join side a, join side b) — pin the
     # 16-byte/row hashed-posting table once instead of re-running the regex
     # tokenizer + k-gram assembly three times over the corpus.
-    sh = _pin(sh)
+    sh = pin(sh)
     if max_df is not None:
         # Broadcast the SMALL side: the high-df (stopword) shingle set is
         # bounded by total_postings / max_df rows, while the surviving-df
@@ -851,47 +648,46 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     near-dup clusters are shallow (cliques/stars from a shared source), so
     2-4 rounds in practice, hard-capped at ``max_iters``. Per round: one
     join + one groupBy on the edge list. The edge list is pinned via
-    :func:`_pin_keyed` (mode-dependent: lazy localCheckpoint by default,
+    :func:`~marketpipe_spark.execution.pin_keyed` (mode-dependent: lazy localCheckpoint by default,
     ``dst``-co-partitioned DISK_ONLY persist under ``MP_PIN_MODE=persist``,
     reliable ``df.checkpoint()`` under ``reliable``); per-round labels are
-    lineage-truncated with an eager :func:`_pin_state` so plans don't nest
+    lineage-truncated with an eager ``pin_state`` so plans don't nest
     across iterations.
     """
-    pins: list = []
-    edges = _pin_keyed(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct(),
-        "dst",
-        scope=pins,
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    n = labels.count()
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(_state(labels, n), edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
+    with pinned() as pins:
+        edges = pin_keyed(
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+            .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+            .distinct(),
+            "dst",
+            scope=pins,
         )
-        # The convergence check rides INSIDE the state pin: `chg` marks
-        # rows whose label improved this round (labels are non-null and
-        # only ever decrease, so `nlabel < label` IS the old
-        # consecutive-frames compare `new != old`). The count is then a
-        # map-only scan of the just-materialized pin blocks instead of a
-        # second shuffle join of consecutive label frames every round.
-        nxt = _pin_state(
-            labels.join(_state(neighbor_min, n), labels.id == neighbor_min.src, "left_outer")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
-                (F.coalesce("nlabel", F.col("label")) < F.col("label")).alias("chg"),
+        labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
+        n = labels.count()
+        for _ in range(max_iters):
+            neighbor_min = (
+                edges.join(broadcast_state(labels, n), edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("label").alias("nlabel"))
             )
-        )
-        changed = nxt.filter("chg").count()
-        labels = nxt.drop("chg")
-        if changed == 0:
-            break
-    _release(pins)  # labels are materialized (eager state pin) — pins done
+            # The convergence check rides INSIDE the state pin: `chg` marks
+            # rows whose label improved this round (labels are non-null and
+            # only ever decrease, so `nlabel < label` IS the old
+            # consecutive-frames compare `new != old`). The count is then a
+            # map-only scan of the just-materialized pin blocks instead of a
+            # second shuffle join of consecutive label frames every round.
+            nxt = pin_state(
+                labels.join(broadcast_state(neighbor_min, n), labels.id == neighbor_min.src, "left_outer")
+                .select(
+                    "id",
+                    F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
+                    (F.coalesce("nlabel", F.col("label")) < F.col("label")).alias("chg"),
+                )
+            )
+            changed = nxt.filter("chg").count()
+            labels = nxt.drop("chg")
+            if changed == 0:
+                break
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -1097,7 +893,7 @@ def embedding_near_duplicates_lsh(
     # consumer (measured: 4 MapInPandas nodes, each above its own scan of
     # the input, in embedding_near_dup_lsh's physical plan). Pinning the
     # narrow (id, table_id, bucket) rows computes the projection once.
-    bk = _pin(
+    bk = pin(
         hyperplane_buckets(
             emb, n_planes, id_col, vec_col, n_tables=n_tables, plane_family=plane_family
         )
@@ -1109,7 +905,7 @@ def embedding_near_duplicates_lsh(
     # Singleton buckets can never produce a self-join pair — drop them
     # before the pin (same pair set, less pinned I/O; see
     # lsh_candidate_pairs).
-    bk = _pin(
+    bk = pin(
         bk.join(
             sizes.filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket)),
             ["table_id", "bucket"],
@@ -1173,8 +969,6 @@ def winnow_fingerprints(
     default stays xxhash64 (JVM codegen).
     """
     from pyspark.sql.window import Window as W
-
-    from .similarity import spread
 
     # Gram build + hashing is map CPU ahead of the per-doc window — spread
     # a coarsely-partitioned input first (measured: single-task stages at
@@ -1253,7 +1047,7 @@ def edit1_token_pairs(
     # tokenize + variant explode + distinct ran twice (4 scans in
     # token_edit_pairs' physical plan). The pin is vocabulary-scale
     # (distinct tokens × delete-variants), bounded regardless of corpus.
-    vr = _pin(tk.select("tok", F.explode(variants).alias("var")).distinct())
+    vr = pin(tk.select("tok", F.explode(variants).alias("var")).distinct())
     a = vr.alias("a")
     b = vr.alias("b")
     cand = (
@@ -1315,7 +1109,7 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from .similarity import kmeans_centroids, spread
+    from .similarity import kmeans_centroids
 
     c_mat = kmeans_centroids(emb, n_cells, refine_iters, id_col, vec_col)
 
@@ -1385,13 +1179,12 @@ def fuzzy_contamination(
 
     Returns ``(test_id, train_id, jaccard)`` with ``jaccard >= threshold``.
     """
-    from .similarity import spread
 
     rows_per_band = num_perm // bands
     # The two shingle pins are independent (train side vs test side):
     # overlap their AQE-finalization jobs so the test side's (small) pass
     # back-fills the train pass's straggler tail (guide §2.6).
-    sh_tr, sh_te = _pin_parallel(
+    sh_tr, sh_te = pin_all(
         with_shingles(spread(train, id_col), text_col, k).select(F.col(id_col), F.col("shingles")),
         with_shingles(spread(test, id_col), text_col, k).select(F.col(id_col), F.col("shingles")),
     )
@@ -1401,7 +1194,7 @@ def fuzzy_contamination(
     # so the train-side signature aggregation — the corpus-scale explode +
     # num_perm mins — runs once, not once per consumer (the
     # lsh_candidate_pairs precedent). bte has a single consumer: no pin.
-    btr = _pin(_banded_sigs(sig_tr, id_col, bands, rows_per_band, hash_family))
+    btr = pin(_banded_sigs(sig_tr, id_col, bands, rows_per_band, hash_family))
     bte = _banded_sigs(sig_te, id_col, bands, rows_per_band, hash_family)
     sizes = btr.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
     btr = btr.join(sizes.filter(F.col("_n") <= max_bucket), ["band_id", "band_hash"]).drop("_n")
@@ -1461,15 +1254,13 @@ def setsim_join_exact(
     """
     from pyspark.sql.window import Window as W
 
-    from .similarity import spread
-
     docs = spread(docs, id_col)
     sh = (
         with_shingles(docs, text_col, k)
         .select(F.col(id_col), F.explode("shingles").alias("shingle"))
         .select(id_col, _hash64(F.col("shingle"), None, family).alias("h"))
     )
-    sh = _pin(sh)
+    sh = pin(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n"))
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("_df"))
     rk = F.row_number().over(W.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("h").asc()))

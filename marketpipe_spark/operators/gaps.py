@@ -14,6 +14,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..execution import pin
+
 
 def _with_calendar_days(
     df: DataFrame, start: dt.date, end: dt.date, weekdays_only: bool
@@ -61,13 +63,12 @@ def gaps_by_symbol(
     crossJoin node, so the plan passes the repo's hygiene ban and the
     expected set is built where the symbol row already lives), anti-joined
     against observed (symbol, day) pairs."""
-    from .dedup import _pin
 
     # One scan, not two: the distinct (symbol, day) frame is pinned and the
     # symbol list derives from it (a distinct of a distinct — identical
     # rows), so the calendar side and the anti-join side share one pass
     # over the lake instead of scanning it once each.
-    present = _pin(
+    present = pin(
         lake.select("symbol", F.col("date").cast("date").alias("day")).distinct()
     )
     symbols = present.select("symbol").distinct()

@@ -18,8 +18,8 @@ Scale design (100 TB): per iteration exactly one shuffle join of the score
 vector against the (pinned) degree-annotated edge list on ``src`` plus one
 hash aggregation on ``dst`` — the textbook distributed PageRank step, linear
 in |E| per round with map-side partial sums. The edge list is pinned once
-(``_pin``: localCheckpoint, or DISK_ONLY persist under ``MP_PIN_MODE=persist``)
-and each iteration's score frame is checkpointed (``_pin_state``:
+(``pin``: localCheckpoint, or DISK_ONLY persist under ``MP_PIN_MODE=persist``)
+and each iteration's score frame is checkpointed (``pin_state``:
 localCheckpoint, or reliable ``df.checkpoint()`` under
 ``MP_PIN_MODE=reliable`` — the executor-loss-proof mode) so plans do not
 nest across rounds. No driver-side collection of nodes or edges; the only
@@ -32,21 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import (  # noqa: F401
-    BROADCAST_STATE_MAX_NODES,
-    _pin,
-    _pin_keyed,
-    _pin_state,
-    _release,
-    _state,
-)
+from ..execution import broadcast_state, coarse, pin, pin_keyed, pin_state, pinned, spread
 
 PPM = 1_000_000
 
 # Per-round state frames (scores, labels, survivor/frontier/distance sets)
 # are NODE-sized but surface from localCheckpoint with unknown statistics;
-# `_state` (shared with dedup_clusters, see dedup.BROADCAST_STATE_MAX_NODES)
-# broadcast-hints them below the 5M-node gate so the pinned edge list is
+# `broadcast_state` (shared with dedup_clusters, see
+# execution.BROADCAST_STATE_MAX_NODES) broadcast-hints them below the 5M-node gate so the pinned edge list is
 # never re-shuffled or re-sorted per round (measured: 4 exchanges + 2 sorts
 # per round -> 1 exchange). Beyond the gate: plain shuffle joins.
 
@@ -82,53 +75,52 @@ def pagerank(
     # localCheckpoint does NOT help — the checkpoint surfaces as `Scan
     # ExistingRDD` with UNKNOWN output partitioning, so EnsureRequirements
     # re-exchanges regardless (verified with an explicit plan check:
-    # repartition+checkpoint join still plans 2 exchanges). `_pin_keyed`
+    # repartition+checkpoint join still plans 2 exchanges). `pin_keyed`
     # therefore only co-partitions under MP_PIN_MODE=persist, where the
     # persisted plan KEEPS its outputPartitioning and the per-round
     # exchange on this (big) side disappears — the cluster upgrade path;
     # scripts/graph_plan_probe.py records the exchange counts per mode.
-    pins: list = []
-    ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
-    # Derive the node set from the PINNED edge frame, not from `e`: ed
-    # carries every edge row, so the id sets are identical — but reading
-    # the pinned blocks makes this pin a cheap distinct instead of a
-    # second full evaluation of the corpus-scale edge distinct (two
-    # separate pin jobs cannot share exchanges, so the old form ran the
-    # edge dedup twice; guide §2.4). Same r11 change across the loop
-    # family (ppr/hits/weighted/hyperball/walks).
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct(),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list (no nodes)")
-    s0 = scale // n
-    base = (PPM - damping_ppm) * s0 // PPM
+    with pinned() as pins:
+        ed = pin_keyed(e.join(deg, "src"), "src", scope=pins)
+        # Derive the node set from the PINNED edge frame, not from `e`: ed
+        # carries every edge row, so the id sets are identical — but reading
+        # the pinned blocks makes this pin a cheap distinct instead of a
+        # second full evaluation of the corpus-scale edge distinct (two
+        # separate pin jobs cannot share exchanges, so the old form ran the
+        # edge dedup twice). Same r11 change across the loop
+        # family (ppr/hits/weighted/hyperball/walks).
+        nodes = pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct(),
+            "id",
+            scope=pins,
+        )
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty edge list (no nodes)")
+        s0 = scale // n
+        base = (PPM - damping_ppm) * s0 // PPM
 
-    scores = nodes.withColumn("score", F.lit(s0).cast("long"))
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score DIV deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
-        )
-        scores = (
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+        scores = nodes.withColumn("score", F.lit(s0).cast("long"))
+        for _ in range(iterations):
+            arrived = (
+                ed.join(broadcast_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score DIV deg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
             )
-        )
-        scores = _pin_state(scores)
-    _release(pins)  # result is materialized (eager state pin) — pins done
+            scores = (
+                nodes.join(broadcast_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
+            scores = pin_state(scores)
     return scores
 
 
@@ -198,12 +190,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     numerator would overflow; a 100 TB caller with larger hubs should cap
     degrees upstream the way the LSH paths cap buckets).
     """
-    e = _pin(
+    e = pin(
         edges.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
     )  # canonicalize: tolerate either-orientation duplicates in the input
-    deg = _pin(
+    deg = pin(
         e.select(F.col("u").alias("id"))
         .unionByName(e.select(F.col("v").alias("id")))
         .groupBy("id")
@@ -216,7 +208,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    eo = _pin(
+    eo = pin(
         ed.select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(fwd, F.col("du")).otherwise(F.col("dv")).alias("da"),
@@ -234,14 +226,10 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
     # The wedge join is compute-dense but byte-tiny (|E| two-long rows in,
     # sum C(outdeg, 2) rows out), so AQE's byte-based coalescing folds it
-    # onto one task (measured at sf0.1). spread_on repartitions both sides
-    # on the join key with an explicit count AQE won't re-coalesce — the
-    # join's own required distribution, guarded to a no-op at scale.
+    # onto one task (measured at sf0.1): spread both sides on the join key.
     # Triangle counts are partition-independent, so results are unchanged.
-    from .similarity import spread_on
-
-    e1 = spread_on(e1, "w_a")
-    e2 = spread_on(e2, "w_a")
+    e1 = spread(e1, "w_a")
+    e2 = spread(e2, "w_a")
     wedges = e1.join(e2, "w_a").where(
         (F.col("w_db") < F.col("w_dc"))
         | ((F.col("w_db") == F.col("w_dc")) & (F.col("w_b") < F.col("w_c")))
@@ -252,15 +240,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # the planner it became Exchange + Sort + SortMergeJoin LeftSemi on
     # the wedges (the pinned closing side has no stats, so auto-broadcast
     # never fires). The closing side is only |E| two-long rows: broadcast
-    # it through the size-gated `_state` helper (same 5M-row gate +
-    # MP_BROADCAST_STATE_MAX_NODES override as every iterative loop here;
-    # above the gate it degrades to the shuffle form, never an OOM). The
+    # it through the size-gated `broadcast_state` (same 5M-row gate as
+    # every iterative loop here; above the gate it degrades to the shuffle form, never an OOM). The
     # count runs over the already-pinned canonical edge frame. Measured
     # at sf0.1: exec 13.3 s -> see OPTIMIZATION_r10.md §14.
-    from .dedup import _state
-
     n_edges = e.count()
-    tri = wedges.join(_state(closing, n_edges), ["w_b", "w_c"], "left_semi")
+    tri = wedges.join(broadcast_state(closing, n_edges), ["w_b", "w_c"], "left_semi")
     per_node = (
         tri.select(
             F.explode(F.array("w_a", "w_b", "w_c")).alias("id")
@@ -357,29 +342,28 @@ def kcore_peel(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
     )  # canonicalize: tolerate either-orientation duplicates in the input
-    pins: list = []
-    sym = _pin_keyed(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        "u",
-        scope=pins,
-    )
-    alive = _pin(sym.select(F.col("u").alias("id")).distinct(), scope=pins)
-    n = alive.count()
-    if k is None:
-        m = sym.count()  # == 2|E|
-        k = (m + n - 1) // n
-    out = alive.withColumn("deg", F.lit(None).cast("long"))
-    for _ in range(rounds):
-        au = _state(out.select(F.col("id").alias("u")), n)
-        av = _state(out.select(F.col("id").alias("v")), n)
-        out = _pin_state(
-            sym.join(au, "u", "left_semi")
-            .join(av, "v", "left_semi")
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
+    with pinned() as pins:
+        sym = pin_keyed(
+            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            "u",
+            scope=pins,
         )
-    _release(pins)  # result is materialized (eager state pin) — pins done
+        alive = pin(sym.select(F.col("u").alias("id")).distinct(), scope=pins)
+        n = alive.count()
+        if k is None:
+            m = sym.count()  # == 2|E|
+            k = (m + n - 1) // n
+        out = alive.withColumn("deg", F.lit(None).cast("long"))
+        for _ in range(rounds):
+            au = broadcast_state(out.select(F.col("id").alias("u")), n)
+            av = broadcast_state(out.select(F.col("id").alias("v")), n)
+            out = pin_state(
+                sym.join(au, "u", "left_semi")
+                .join(av, "v", "left_semi")
+                .groupBy(F.col("u").alias("id"))
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .where(F.col("deg") >= k)
+            )
     return out
 
 
@@ -432,34 +416,33 @@ def kcore_layers(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
     )  # canonicalize: tolerate either-orientation duplicates in the input
-    pins: list = []
-    sym = _pin_keyed(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        "u",
-        scope=pins,
-    )
-    # The node set is consumed after the loop too (the final layer joins):
-    # pin it as STATE (eager) so it is already materialized when the
-    # loop-invariant pins are released below.
-    alive = _pin_state(sym.select(F.col("u").alias("id")).distinct())
-    n = alive.count()
-    if k is None:
-        m = sym.count()  # == 2|E|
-        k = (m + n - 1) // n
-    degs = []  # per-round survivor-degree frames d1..d{rounds}
-    surv = alive
-    for _ in range(rounds):
-        au = _state(surv.select(F.col("id").alias("u")), n)
-        av = _state(surv.select(F.col("id").alias("v")), n)
-        d = _pin_state(
-            sym.join(au, "u", "left_semi")
-            .join(av, "v", "left_semi")
-            .groupBy(F.col("u").alias("id"))
-            .agg(F.count(F.lit(1)).alias("deg"))
+    with pinned() as pins:
+        sym = pin_keyed(
+            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            "u",
+            scope=pins,
         )
-        degs.append(d)
-        surv = d.where(F.col("deg") >= k)
-    _release(pins)  # every d{i} + alive is materialized — sym is done
+        # The node set is consumed after the loop too (the final layer joins):
+        # pin it as STATE (eager) so it is already materialized when the
+        # loop-invariant pins are released below.
+        alive = pin_state(sym.select(F.col("u").alias("id")).distinct())
+        n = alive.count()
+        if k is None:
+            m = sym.count()  # == 2|E|
+            k = (m + n - 1) // n
+        degs = []  # per-round survivor-degree frames d1..d{rounds}
+        surv = alive
+        for _ in range(rounds):
+            au = broadcast_state(surv.select(F.col("id").alias("u")), n)
+            av = broadcast_state(surv.select(F.col("id").alias("v")), n)
+            d = pin_state(
+                sym.join(au, "u", "left_semi")
+                .join(av, "v", "left_semi")
+                .groupBy(F.col("u").alias("id"))
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            degs.append(d)
+            surv = d.where(F.col("deg") >= k)
     out = alive
     for i, d in enumerate(degs, start=1):
         out = out.join(
@@ -551,41 +534,40 @@ def khop_reach(edges: DataFrame, seeds: DataFrame, hops: int = 3) -> DataFrame:
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
     )  # canonicalize: tolerate either-orientation duplicates in the input
-    pins: list = []
-    sym = _pin_keyed(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        "u",
-        scope=pins,
-    )
-    # Loop STATE must truncate lineage every round in EVERY pin mode: under
-    # MP_PIN_MODE=persist a lineage-keeping pin would nest each round's plan
-    # into the next (measured: per-round stage count ballooned 9 -> 21).
-    # Lazy (eager=False) pins here: the whole hop chain materializes in one
-    # job at the caller's first action instead of one job per hop.
-    visited = _pin_state(
-        seeds.select("id").distinct().withColumn("hop", F.lit(0).cast("long")),
-        eager=False,
-    )
-    n = sym.select(F.col("u").alias("id")).distinct().count()
-    frontier = visited.select("id")
-    for i in range(1, hops + 1):
-        nbrs = (
-            sym.join(_state(frontier.withColumnRenamed("id", "u"), n), "u", "left_semi")
-            .select(F.col("v").alias("id"))
-            .distinct()
+    with pinned() as pins:
+        sym = pin_keyed(
+            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            "u",
+            scope=pins,
         )
-        new = nbrs.join(_state(visited.select("id"), n), "id", "left_anti")
-        visited = _pin_state(
-            visited.unionByName(new.withColumn("hop", F.lit(i).cast("long"))),
+        # Loop STATE must truncate lineage every round in EVERY pin mode: under
+        # MP_PIN_MODE=persist a lineage-keeping pin would nest each round's plan
+        # into the next (measured: per-round stage count ballooned 9 -> 21).
+        # Lazy (eager=False) pins here: the whole hop chain materializes in one
+        # job at the caller's first action instead of one job per hop.
+        visited = pin_state(
+            seeds.select("id").distinct().withColumn("hop", F.lit(0).cast("long")),
             eager=False,
         )
-        frontier = new
-    if pins:
-        # persist mode: the lazy hop chain references the pinned edge list —
-        # materialize the result while the pins are still cached, THEN free
-        # them (otherwise each hop's join would recompute sym on first use).
-        visited = _pin_state(visited)
-        _release(pins)
+        n = sym.select(F.col("u").alias("id")).distinct().count()
+        frontier = visited.select("id")
+        for i in range(1, hops + 1):
+            nbrs = (
+                sym.join(broadcast_state(frontier.withColumnRenamed("id", "u"), n), "u", "left_semi")
+                .select(F.col("v").alias("id"))
+                .distinct()
+            )
+            new = nbrs.join(broadcast_state(visited.select("id"), n), "id", "left_anti")
+            visited = pin_state(
+                visited.unionByName(new.withColumn("hop", F.lit(i).cast("long"))),
+                eager=False,
+            )
+            frontier = new
+        if pins:
+            # persist mode: the lazy hop chain references the pinned edge list —
+            # materialize the result while the pins are still cached, before
+            # the scope frees them (else each hop's join recomputes sym).
+            visited = pin_state(visited)
     return visited
 
 
@@ -643,35 +625,34 @@ def bounded_sssp(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))  # canonicalized: min weight across duplicates/orientations
     )
-    pins: list = []
-    sym = _pin_keyed(
-        e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-        ),
-        "u",
-        scope=pins,
-    )
-    # dist is loop STATE: lineage-truncate every round in every pin mode
-    # (see khop_reach note; lazy pins — one materializing job at the end).
-    dist = _pin_state(
-        seeds.select("id").distinct().withColumn("dist", F.lit(0).cast("long")),
-        eager=False,
-    )
-    n = sym.select(F.col("u").alias("id")).distinct().count()
-    for _ in range(rounds):
-        cand = (
-            sym.join(_state(dist.withColumnRenamed("id", "u"), n), "u")
-            .select(F.col("v").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+    with pinned() as pins:
+        sym = pin_keyed(
+            e.unionByName(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
+            ),
+            "u",
+            scope=pins,
         )
-        dist = _pin_state(
-            dist.unionByName(cand).groupBy("id").agg(F.min("dist").alias("dist")),
+        # dist is loop STATE: lineage-truncate every round in every pin mode
+        # (see khop_reach note; lazy pins — one materializing job at the end).
+        dist = pin_state(
+            seeds.select("id").distinct().withColumn("dist", F.lit(0).cast("long")),
             eager=False,
         )
-    if pins:
-        # persist mode: materialize the lazy relax chain before freeing the
-        # pinned edge list it references (see khop_reach note).
-        dist = _pin_state(dist)
-        _release(pins)
+        n = sym.select(F.col("u").alias("id")).distinct().count()
+        for _ in range(rounds):
+            cand = (
+                sym.join(broadcast_state(dist.withColumnRenamed("id", "u"), n), "u")
+                .select(F.col("v").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+            )
+            dist = pin_state(
+                dist.unionByName(cand).groupBy("id").agg(F.min("dist").alias("dist")),
+                eager=False,
+            )
+        if pins:
+            # persist mode: materialize the lazy relax chain before the scope
+            # frees the pinned edge list it references (see khop_reach note).
+            dist = pin_state(dist)
     return dist
 
 
@@ -727,47 +708,39 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
     )  # canonicalize: tolerate either-orientation duplicates in the input
-    pins: list = []
-    sym = _pin_keyed(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        "v",
-        scope=pins,
-    )
-    # initial labels are round-0 STATE (consumed only by the loop)
-    labels = _pin_state(
-        sym.select(F.col("u").alias("id")).distinct().withColumn(
-            "label", F.col("id")
+    with pinned() as pins:
+        sym = pin_keyed(
+            e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+            "v",
+            scope=pins,
         )
-    )
-    n = labels.count()
-    # The per-round (id, label) vote count is the loop's one EDGE-scale
-    # aggregation, and its exchange is byte-tiny (two longs/row), so AQE's
-    # byte-based coalescing folds it onto ~3 tasks at sf0.1 while the
-    # count work is per-edge CPU. When the pinned edge frame itself has
-    # fewer partitions than the cluster (the coarse-input regime — probed
-    # ONCE on the materialized pin, no job), repartition the vote rows on
-    # the full groupBy key with an explicit count AQE won't re-coalesce:
-    # measured 8.0 -> 6.5 s on copurchase_communities, labels identical.
-    # (A broader variant — re-pinning the edge frame itself spread to
-    # cluster parallelism — measured WORSE on every loop entry (e.g.
-    # pagerank 4.3 -> 8.4 s): the extra pin materialization plus 32-task
-    # overhead on node-scale rounds exceeds the map-parallelism gain.)
-    P = sym.sparkSession.sparkContext.defaultParallelism
-    spread_votes = sym.rdd.getNumPartitions() < P
-    for _ in range(iterations):
-        nbr = (
-            sym.join(_state(labels, n), sym.v == labels.id)
-            .select(F.col("u").alias("id"), "label")
+        # initial labels are round-0 STATE (consumed only by the loop)
+        labels = pin_state(
+            sym.select(F.col("u").alias("id")).distinct().withColumn(
+                "label", F.col("id")
+            )
         )
-        allv = nbr.unionByName(labels.select("id", "label"))
-        if spread_votes:
-            allv = allv.repartition(P, F.col("id"), F.col("label"))
-        votes = allv.groupBy("id", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        labels = _pin_state(
-            votes.groupBy("id")
-            .agg(F.expr("max_by(label, struct(cnt, -label))").alias("label"))
-        )
-    _release(pins)  # result is materialized (eager state pin) — pins done
+        n = labels.count()
+        # The per-round vote count is the loop's one EDGE-scale aggregation
+        # over a byte-tiny exchange, which AQE folds onto ~3 tasks: on a
+        # coarse edge pin (probed once, on the pin) hash the vote rows on
+        # the groupBy key at cluster parallelism (architecture.md,
+        # "Execution policy"). Labels are identical either way.
+        P = sym.sparkSession.sparkContext.defaultParallelism
+        spread_votes = coarse(sym)
+        for _ in range(iterations):
+            nbr = (
+                sym.join(broadcast_state(labels, n), sym.v == labels.id)
+                .select(F.col("u").alias("id"), "label")
+            )
+            allv = nbr.unionByName(labels.select("id", "label"))
+            if spread_votes:
+                allv = allv.repartition(P, F.col("id"), F.col("label"))
+            votes = allv.groupBy("id", "label").agg(F.count(F.lit(1)).alias("cnt"))
+            labels = pin_state(
+                votes.groupBy("id")
+                .agg(F.expr("max_by(label, struct(cnt, -label))").alias("label"))
+            )
     return labels
 
 
@@ -846,7 +819,7 @@ def link_prediction(
     pattern — no self-join materializes), one hash agg on (b, c), an
     anti-join against the edge list, and a TakeOrderedAndProject.
     """
-    e = _pin(
+    e = pin(
         edges.select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         ).distinct()
@@ -961,54 +934,53 @@ def personalized_pagerank(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    pins: list = []
-    ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
-    sd = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    # Node ids from the PINNED ed (identical id set; see pagerank) — the
-    # nodes pin reads materialized blocks instead of re-running the edge
-    # distinct as a second corpus pass.
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(sd.withColumn("_seed", F.lit(1)), "id", "left_outer")
-        .select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed")),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    ns = nodes.where(F.col("is_seed") == 1).count()
-    if ns == 0:
-        raise ValueError("personalized_pagerank: no seed appears in the edge list")
-    s0 = scale // ns
-    base = (PPM - damping_ppm) * s0 // PPM
+    with pinned() as pins:
+        ed = pin_keyed(e.join(deg, "src"), "src", scope=pins)
+        sd = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
+        # Node ids from the PINNED ed (identical id set; see pagerank) — the
+        # nodes pin reads materialized blocks instead of re-running the edge
+        # distinct as a second corpus pass.
+        nodes = pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct()
+            .join(sd.withColumn("_seed", F.lit(1)), "id", "left_outer")
+            .select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed")),
+            "id",
+            scope=pins,
+        )
+        n = nodes.count()
+        ns = nodes.where(F.col("is_seed") == 1).count()
+        if ns == 0:
+            raise ValueError("personalized_pagerank: no seed appears in the edge list")
+        s0 = scale // ns
+        base = (PPM - damping_ppm) * s0 // PPM
 
-    scores = nodes.select(
-        "id",
-        F.when(F.col("is_seed") == 1, F.lit(s0))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("score"),
-    )
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score DIV deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
+        scores = nodes.select(
+            "id",
+            F.when(F.col("is_seed") == 1, F.lit(s0))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("score"),
         )
-        scores = (
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+        for _ in range(iterations):
+            arrived = (
+                ed.join(broadcast_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score DIV deg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
             )
-        )
-        scores = _pin_state(scores)
-    _release(pins)
+            scores = (
+                nodes.join(broadcast_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(F.lit(0))
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
+            scores = pin_state(scores)
     return scores
 
 
@@ -1113,74 +1085,73 @@ def hyperball_harmonic(
     adj = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
         e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    pins: list = []
-    ad = _pin_keyed(adj, "src", scope=pins)
-    # Node ids from the PINNED ad (same rows as adj) — a cheap distinct
-    # over materialized blocks instead of a second corpus-scale adjacency
-    # build (see pagerank).
-    nodes = _pin_keyed(ad.select(F.col("src").alias("id")).distinct(), "id", scope=pins)
+    with pinned() as pins:
+        ad = pin_keyed(adj, "src", scope=pins)
+        # Node ids from the PINNED ad (same rows as adj) — a cheap distinct
+        # over materialized blocks instead of a second corpus-scale adjacency
+        # build (see pagerank).
+        nodes = pin_keyed(ad.select(F.col("src").alias("id")).distinct(), "id", scope=pins)
 
-    from .sketches import hll_estimate
+        from .sketches import hll_estimate
 
-    h = _hash64(F.col("id").cast("string"), None, family)
-    w = F.shiftright(h, p)
-    rho = F.least(
-        F.lit(HB_RHO_CAP),
-        F.when(w == F.lit(0).cast("long"), F.lit(max_rho)).otherwise(
-            F.lit(max_rho) - F.length(F.bin(w))
-        ),
-    )
-    # One-hot initial array: regs[i] = rho at the node's own bucket, 0
-    # elsewhere. 0 is a safe empty marker because every real register is
-    # >= 1 (rho >= 1 by construction), so element-wise MAX over arrays is
-    # exactly the per-(id, bucket) MAX over present register rows.
-    init = F.expr(
-        f"transform(sequence(0, {m - 1}), "
-        "i -> CASE WHEN i = _b THEN _r ELSE CAST(0 AS BIGINT) END)"
-    )
-    regs = _pin_state(
-        nodes.select(
+        h = _hash64(F.col("id").cast("string"), None, family)
+        w = F.shiftright(h, p)
+        rho = F.least(
+            F.lit(HB_RHO_CAP),
+            F.when(w == F.lit(0).cast("long"), F.lit(max_rho)).otherwise(
+                F.lit(max_rho) - F.length(F.bin(w))
+            ),
+        )
+        # One-hot initial array: regs[i] = rho at the node's own bucket, 0
+        # elsewhere. 0 is a safe empty marker because every real register is
+        # >= 1 (rho >= 1 by construction), so element-wise MAX over arrays is
+        # exactly the per-(id, bucket) MAX over present register rows.
+        init = F.expr(
+            f"transform(sequence(0, {m - 1}), "
+            "i -> CASE WHEN i = _b THEN _r ELSE CAST(0 AS BIGINT) END)"
+        )
+        regs = pin_state(
+            nodes.select(
+                "id",
+                h.bitwiseAND(F.lit(m - 1)).alias("_b"),
+                rho.cast("long").alias("_r"),
+            ).select("id", init.alias("regs"))
+        )
+
+        def _est(regs_arr: DataFrame, alias: str) -> DataFrame:
+            # hll_estimate consumes the row form; exploding the array and
+            # dropping empty slots reproduces the register multiset exactly
+            # (a slot is > 0 iff some ball member hashed to that bucket).
+            rows = regs_arr.select(
+                "id", F.posexplode("regs").alias("bucket", "reg")
+            ).filter(F.col("reg") > 0)
+            return hll_estimate(rows, ["id"], p, alpha_ppm).select(
+                "id", F.col("hll_est_x1000").alias(alias)
+            )
+
+        ests = [_est(regs, "e0")]
+        elem_max = F.array(*[F.max(F.col("regs")[i]) for i in range(m)]).alias("regs")
+        for t in range(1, rounds + 1):
+            moved = ad.join(regs, ad.src == regs.id).select(
+                F.col("dst").alias("id"), "regs"
+            )
+            regs = pin_state(
+                regs.unionByName(moved).groupBy("id").agg(elem_max)
+            )
+            ests.append(_est(regs, f"e{t}"))
+        out = nodes
+        for fr in ests:
+            out = out.join(fr, "id")
+        harm = " + ".join(
+            f"(greatest(CAST(0 AS BIGINT), e{t} - e{t - 1}) DIV {t})"
+            for t in range(1, rounds + 1)
+        )
+        res = out.select(
             "id",
-            h.bitwiseAND(F.lit(m - 1)).alias("_b"),
-            rho.cast("long").alias("_r"),
-        ).select("id", init.alias("regs"))
-    )
-
-    def _est(regs_arr: DataFrame, alias: str) -> DataFrame:
-        # hll_estimate consumes the row form; exploding the array and
-        # dropping empty slots reproduces the register multiset exactly
-        # (a slot is > 0 iff some ball member hashed to that bucket).
-        rows = regs_arr.select(
-            "id", F.posexplode("regs").alias("bucket", "reg")
-        ).filter(F.col("reg") > 0)
-        return hll_estimate(rows, ["id"], p, alpha_ppm).select(
-            "id", F.col("hll_est_x1000").alias(alias)
+            F.col(f"e{rounds}").alias("ball_x1000"),
+            F.expr(harm).cast("long").alias("harmonic_x1000"),
         )
-
-    ests = [_est(regs, "e0")]
-    elem_max = F.array(*[F.max(F.col("regs")[i]) for i in range(m)]).alias("regs")
-    for t in range(1, rounds + 1):
-        moved = ad.join(regs, ad.src == regs.id).select(
-            F.col("dst").alias("id"), "regs"
-        )
-        regs = _pin_state(
-            regs.unionByName(moved).groupBy("id").agg(elem_max)
-        )
-        ests.append(_est(regs, f"e{t}"))
-    out = nodes
-    for fr in ests:
-        out = out.join(fr, "id")
-    harm = " + ".join(
-        f"(greatest(CAST(0 AS BIGINT), e{t} - e{t - 1}) DIV {t})"
-        for t in range(1, rounds + 1)
-    )
-    res = out.select(
-        "id",
-        F.col(f"e{rounds}").alias("ball_x1000"),
-        F.expr(harm).cast("long").alias("harmonic_x1000"),
-    )
-    res = _pin_state(res)  # materialize before releasing the pinned inputs
-    _release(pins)
+        res = pin_state(res)  # materialize before releasing the pinned inputs
     return res
 
 
@@ -1297,60 +1268,59 @@ def deterministic_walks(
     )
     from pyspark.sql.window import Window as W
 
-    pins: list = []
-    ia = _pin_keyed(
-        adj.select(
+    with pinned() as pins:
+        ia = pin_keyed(
+            adj.select(
+                "z",
+                "nb",
+                F.row_number().over(W.partitionBy("z").orderBy("nb")).cast("long").alias("idx"),
+            ),
             "z",
-            "nb",
-            F.row_number().over(W.partitionBy("z").orderBy("nb")).cast("long").alias("idx"),
-        ),
-        "z",
-        scope=pins,
-    )
-    # Degrees from the PINNED indexed adjacency (same rows as adj, plus
-    # idx) — the dg pin aggregates materialized blocks instead of
-    # re-running the corpus-scale adjacency build a second time (see
-    # pagerank).
-    dg = _pin_keyed(
-        ia.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("deg")),
-        "z",
-        scope=pins,
-    )
-    n = dg.count()
+            scope=pins,
+        )
+        # Degrees from the PINNED indexed adjacency (same rows as adj, plus
+        # idx) — the dg pin aggregates materialized blocks instead of
+        # re-running the corpus-scale adjacency build a second time (see
+        # pagerank).
+        dg = pin_keyed(
+            ia.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("deg")),
+            "z",
+            scope=pins,
+        )
+        n = dg.count()
 
-    ws = [F.lit(w).alias("w") for w in range(walks_per_node)]
-    state = dg.select(F.col("z").alias("start")).select(
-        "start", F.explode(F.array(*ws)).alias("w")
-    ).select("start", "w", F.col("start").alias("cur"))
-    state = _pin_state(state)
-    visits = [state.select(F.col("cur").alias("id"))]
-    for s in range(1, steps + 1):
-        key = F.concat_ws(
-            ":",
-            F.col("start").cast("string"),
-            F.col("w").cast("string"),
-            F.lit(str(s)),
-            F.col("cur").cast("string"),
-        )
-        stepped = (
-            state.join(_state(dg, n), state.cur == dg.z)
-            .select(
-                "start",
-                "w",
-                "cur",
-                (F.pmod(_hash64(key, None, family), F.col("deg")) + 1).alias("_idx"),
+        ws = [F.lit(w).alias("w") for w in range(walks_per_node)]
+        state = dg.select(F.col("z").alias("start")).select(
+            "start", F.explode(F.array(*ws)).alias("w")
+        ).select("start", "w", F.col("start").alias("cur"))
+        state = pin_state(state)
+        visits = [state.select(F.col("cur").alias("id"))]
+        for s in range(1, steps + 1):
+            key = F.concat_ws(
+                ":",
+                F.col("start").cast("string"),
+                F.col("w").cast("string"),
+                F.lit(str(s)),
+                F.col("cur").cast("string"),
             )
-            .join(ia, (F.col("cur") == ia.z) & (F.col("_idx") == ia.idx))
-            .select("start", "w", F.col("nb").alias("cur"))
-        )
-        state = _pin_state(stepped)
-        visits.append(state.select(F.col("cur").alias("id")))
-    allv = visits[0]
-    for v in visits[1:]:
-        allv = allv.unionByName(v)
-    out = allv.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("visits"))
-    out = _pin_state(out)
-    _release(pins)
+            stepped = (
+                state.join(broadcast_state(dg, n), state.cur == dg.z)
+                .select(
+                    "start",
+                    "w",
+                    "cur",
+                    (F.pmod(_hash64(key, None, family), F.col("deg")) + 1).alias("_idx"),
+                )
+                .join(ia, (F.col("cur") == ia.z) & (F.col("_idx") == ia.idx))
+                .select("start", "w", F.col("nb").alias("cur"))
+            )
+            state = pin_state(stepped)
+            visits.append(state.select(F.col("cur").alias("id")))
+        allv = visits[0]
+        for v in visits[1:]:
+            allv = allv.unionByName(v)
+        out = allv.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("visits"))
+        out = pin_state(out)
     return out
 
 
@@ -1416,8 +1386,8 @@ def hits(
     (customers are hubs, parts are authorities). Initial ``h = scale``.
 
     Scale: one shuffle join + one hash agg per half-round on the pinned
-    edge list (the pagerank discipline: `_pin_keyed` co-partitions under
-    persist mode, `_state` broadcast-gates the node-sized score frames);
+    edge list (the pagerank discipline: `pin_keyed` co-partitions under
+    persist mode, `broadcast_state` gates the node-sized score frames);
     normalization totals ride a non-foldable 0-key BroadcastHashJoin.
     Integer bound (ENFORCED): the renormalization computes
     ``raw * N * scale`` where ``raw`` can itself reach ~``N * scale``
@@ -1431,64 +1401,63 @@ def hits(
     if iterations < 1:
         raise ValueError("hits needs iterations >= 1 (authority is undefined at round 0)")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    pins: list = []
-    ed = _pin_keyed(e, "src", scope=pins)
-    # Node ids from the PINNED ed (identical id set; see pagerank).
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct(),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    _check_renorm_bound(n, scale, "hits")
+    with pinned() as pins:
+        ed = pin_keyed(e, "src", scope=pins)
+        # Node ids from the PINNED ed (identical id set; see pagerank).
+        nodes = pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct(),
+            "id",
+            scope=pins,
+        )
+        n = nodes.count()
+        _check_renorm_bound(n, scale, "hits")
 
-    def _mean_norm(scored: DataFrame, col: str) -> DataFrame:
-        tot = scored.agg(F.sum(col).cast("long").alias("_tot"))
-        return (
-            scored.withColumn("_k", _zero_key(F.col("id")))
-            .join(F.broadcast(tot.withColumn("_k", _zero_key(F.col("_tot")))), "_k")
-            .select(
-                "id",
-                F.expr(f"{col} * {n} * {scale} DIV _tot").alias(col),
+        def _mean_norm(scored: DataFrame, col: str) -> DataFrame:
+            tot = scored.agg(F.sum(col).cast("long").alias("_tot"))
+            return (
+                scored.withColumn("_k", _zero_key(F.col("id")))
+                .join(F.broadcast(tot.withColumn("_k", _zero_key(F.col("_tot")))), "_k")
+                .select(
+                    "id",
+                    F.expr(f"{col} * {n} * {scale} DIV _tot").alias(col),
+                )
             )
-        )
 
-    h = nodes.withColumn("h", F.lit(scale).cast("long"))
-    a = None
-    for _ in range(iterations):
-        raw_a = (
-            ed.join(_state(h, n), ed.src == h.id)
-            .select("dst", "h")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("ra"))
+        h = nodes.withColumn("h", F.lit(scale).cast("long"))
+        a = None
+        for _ in range(iterations):
+            raw_a = (
+                ed.join(broadcast_state(h, n), ed.src == h.id)
+                .select("dst", "h")
+                .groupBy("dst")
+                .agg(F.sum("h").alias("ra"))
+            )
+            a = pin_state(
+                _mean_norm(
+                    nodes.join(broadcast_state(raw_a, n), nodes.id == raw_a.dst, "left_outer")
+                    .select("id", F.coalesce("ra", F.lit(0)).cast("long").alias("a")),
+                    "a",
+                ).select("id", F.col("a"))
+            )
+            raw_h = (
+                ed.join(broadcast_state(a.select(F.col("id").alias("aid"), "a"), n), ed.dst == F.col("aid"))
+                .select("src", "a")
+                .groupBy("src")
+                .agg(F.sum("a").alias("rh"))
+            )
+            h = pin_state(
+                _mean_norm(
+                    nodes.join(broadcast_state(raw_h, n), nodes.id == raw_h.src, "left_outer")
+                    .select("id", F.coalesce("rh", F.lit(0)).cast("long").alias("h")),
+                    "h",
+                ).select("id", F.col("h"))
+            )
+        out = pin_state(
+            h.join(a.select(F.col("id").alias("_aid"), "a"), h.id == F.col("_aid"))
+            .select("id", F.col("h").alias("hub"), F.col("a").alias("auth"))
         )
-        a = _pin_state(
-            _mean_norm(
-                nodes.join(_state(raw_a, n), nodes.id == raw_a.dst, "left_outer")
-                .select("id", F.coalesce("ra", F.lit(0)).cast("long").alias("a")),
-                "a",
-            ).select("id", F.col("a"))
-        )
-        raw_h = (
-            ed.join(_state(a.select(F.col("id").alias("aid"), "a"), n), ed.dst == F.col("aid"))
-            .select("src", "a")
-            .groupBy("src")
-            .agg(F.sum("a").alias("rh"))
-        )
-        h = _pin_state(
-            _mean_norm(
-                nodes.join(_state(raw_h, n), nodes.id == raw_h.src, "left_outer")
-                .select("id", F.coalesce("rh", F.lit(0)).cast("long").alias("h")),
-                "h",
-            ).select("id", F.col("h"))
-        )
-    out = _pin_state(
-        h.join(a.select(F.col("id").alias("_aid"), "a"), h.id == F.col("_aid"))
-        .select("id", F.col("h").alias("hub"), F.col("a").alias("auth"))
-    )
-    _release(pins)
     return out
 
 
@@ -1582,51 +1551,50 @@ def pagerank_weighted(
         .agg(F.sum("w").cast("long").alias("w"))
     )
     ws = e.groupBy("src").agg(F.sum("w").cast("long").alias("wsum"))
-    pins: list = []
-    ed = _pin_keyed(e.join(ws, "src"), "src", scope=pins)
-    # The weight-contract probe runs against the PINNED ed, not against
-    # `e`: the inner join on src preserves every aggregated edge row (ws
-    # is keyed by e's own src values), so the w column is the same row
-    # set — but the probe now scans materialized blocks instead of paying
-    # a dedicated corpus-scale aggregation job before any pin exists.
-    if ed.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count() > 0:
-        raise ValueError(
-            "pagerank_weighted: edge weights must be positive and non-NULL "
-            "(a NULL/<=0 weight would propagate NULL scores)"
-        )
-    # Node ids from the PINNED ed (identical id set; see pagerank).
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct(),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank_weighted: empty edge list (no nodes)")
-    s0 = scale // n
-    base = (PPM - damping_ppm) * s0 // PPM
-
-    scores = nodes.withColumn("score", F.lit(s0).cast("long"))
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score * w DIV wsum").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
-        )
-        scores = _pin_state(
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+    with pinned() as pins:
+        ed = pin_keyed(e.join(ws, "src"), "src", scope=pins)
+        # The weight-contract probe runs against the PINNED ed, not against
+        # `e`: the inner join on src preserves every aggregated edge row (ws
+        # is keyed by e's own src values), so the w column is the same row
+        # set — but the probe now scans materialized blocks instead of paying
+        # a dedicated corpus-scale aggregation job before any pin exists.
+        if ed.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count() > 0:
+            raise ValueError(
+                "pagerank_weighted: edge weights must be positive and non-NULL "
+                "(a NULL/<=0 weight would propagate NULL scores)"
             )
+        # Node ids from the PINNED ed (identical id set; see pagerank).
+        nodes = pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct(),
+            "id",
+            scope=pins,
         )
-    _release(pins)
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank_weighted: empty edge list (no nodes)")
+        s0 = scale // n
+        base = (PPM - damping_ppm) * s0 // PPM
+
+        scores = nodes.withColumn("score", F.lit(s0).cast("long"))
+        for _ in range(iterations):
+            arrived = (
+                ed.join(broadcast_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score * w DIV wsum").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
+            )
+            scores = pin_state(
+                nodes.join(broadcast_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
     return scores
 
 

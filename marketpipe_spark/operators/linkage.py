@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import pin, spread
+
 
 def nearest_field_match(
     df: DataFrame,
@@ -60,7 +62,6 @@ def nearest_field_match(
     ascending, DuckDB NULLS LAST), so a NULL field would make the winner
     engine-dependent. Filter or coalesce upstream.
     """
-    from .dedup import _pin
 
     # Multi-consumer pins (the lm_perplexity/dsir precedent): unpinned,
     # this plan re-ran the source scan + projection and the block-cap
@@ -70,7 +71,7 @@ def nearest_field_match(
     # `cand` feeds three more (dist-0 candidates, the probe, the band
     # join). Both are three narrow columns per record, so the pins are
     # bounded while the avoided work is a full scan + window sort each.
-    base = _pin(
+    base = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.col(field_col).alias("f"),
@@ -78,7 +79,7 @@ def nearest_field_match(
         )
     )
     wcap = Window.partitionBy("blk").orderBy("id")
-    cand = _pin(
+    cand = pin(
         base.withColumn("rn", F.row_number().over(wcap))
         .where(F.col("rn") <= max_block)
         .select("id", "f", "blk")
@@ -102,7 +103,7 @@ def nearest_field_match(
     b = base.alias("b")
     # `zero` feeds the remainder anti-join AND the final union: pin the
     # (id, match_id, dist) result so the equality join runs once.
-    zero = _pin(
+    zero = pin(
         b.join(
             c,
             (F.col("b.blk") == F.col("c.blk"))
@@ -133,7 +134,7 @@ def nearest_field_match(
     r = rem.alias("r")
     # `probe_pair` feeds the band join's probe side AND the pair union:
     # pinned, the probe scoring (join + window + levenshtein) runs once.
-    probe_pair = _pin(
+    probe_pair = pin(
         r.join(
             probe2,
             (F.col("r.blk") == F.col("p.blk")) & (F.col("r.id") != F.col("p.id")),
@@ -238,7 +239,6 @@ def blocked_similarity_pairs(
     NON-NULL (levenshtein(NULL, x) is NULL — same contract as
     nearest_field_match).
     """
-    from .dedup import _pin
 
     base = df.select(
         F.col(id_col).alias("id"),
@@ -249,34 +249,21 @@ def blocked_similarity_pairs(
     # `cand` is BOTH sides of the pair self-join: unpinned, the source
     # scan + block-cap window runs twice. The pin is narrow (id, field,
     # block cols) and bounded by the input.
-    cand = _pin(
+    cand = pin(
         base.withColumn("rn", F.row_number().over(wcap))
         .where(F.col("rn") <= max_block)
         .drop("rn")
     )
-    # Length-band equi-key decomposition (guide §2.5 — the levenshtein work
-    # is COMPUTE-dense but byte-tiny, which AQE's byte-based coalescing
-    # serializes onto one task: measured 1 task / 5.3 s for this join at
-    # sf0.1 on local[32]). The non-equi band |len_a - len_b| <= max_dist
-    # becomes an exact equi-key: the b side is replicated (2*max_dist + 1)
-    # ways keyed by len(b.f) + d, the a side joins on len(a.f) — each band
-    # pair matches exactly once (d = len_a - len_b is unique), so the pair
-    # set is IDENTICAL (A/B'd: exceptAll both ways = 0 rows). The a side is
-    # then hash-repartitioned on the FULL (block, length) key — join-key
-    # distribution, so no extra exchange is planned — with an explicit
-    # partition count, which AQE does not re-coalesce. Scale guard (the
-    # spread() pattern): once the input already yields cluster parallelism
-    # (any real lake scan), the repartition is skipped and the plan keeps
-    # its native exchanges. Measured: 5.3 s -> 0.8 s (6.5×) at sf0.1.
+    # Length-band equi-key decomposition: the non-equi band
+    # |len_a - len_b| <= max_dist becomes an exact equi-key — the b side is
+    # replicated (2*max_dist + 1) ways keyed by len(b.f) + d, the a side
+    # joins on len(a.f); each band pair matches exactly once (d = len_a -
+    # len_b is unique), so the pair set is IDENTICAL (A/B'd: exceptAll both
+    # ways = 0 rows). spread on the full (block, length) join key: the
+    # levenshtein work is compute-dense but byte-tiny, so AQE would fold it
+    # onto one task (architecture.md, "Execution policy").
     wl = cand.withColumn("__bsp_len", F.length("f"))
-    sc = df.sparkSession.sparkContext
-    a_side = wl
-    if a_side.rdd.getNumPartitions() < sc.defaultParallelism:
-        a_side = a_side.repartition(
-            sc.defaultParallelism,
-            *[F.col(c) for c in [*block_cols, "__bsp_len"]],
-        )
-    a = a_side.alias("a")
+    a = spread(wl, *block_cols, "__bsp_len").alias("a")
     b = (
         wl.withColumn(
             "__bsp_d", F.explode(F.sequence(F.lit(-max_dist), F.lit(max_dist)))

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..execution import spread
+
 #: Typed metadata produced by the header decoder.
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -443,7 +445,6 @@ def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     a stand-in payload with the same Spark-side shape as real media).
     Spread across the cluster so the Python decode workers run in parallel
     even when the input arrives as one small file."""
-    from .similarity import spread
 
     return spread(docs, "doc_id").withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
 

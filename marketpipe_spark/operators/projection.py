@@ -128,7 +128,7 @@ def group_centroids(
     At 100 TB: the corpus streams through stage 1 map-only; the shuffle
     carries only ``tasks * groups * dims`` rows (KBs, cardinality-
     independent). int64 headroom: |q| <= 1e6 per component allows ~9e12
-    rows per (group, task) partial before overflow — beyond that, widen to
+    rows per (group, task) partial before overflow — beyond that, cast to
     decimal(38,0) in the final agg.
     """
     import numpy as np

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _pin_state
+from ..execution import pin, pin_state, pinned
 
 
 def _zero_key(c: Column) -> Column:
@@ -97,7 +97,6 @@ def bradley_terry(
     ``n_ab * scale^2`` additionally needs ``n_ab <= 9.2e18 / scale^2``,
     ~9.2e6 games per pair at the default.)
     """
-    from .dedup import _pin, _release
 
     sq = scale * scale
     mt = matches.select(F.col(winner).alias("w"), F.col(loser).alias("l"))
@@ -106,71 +105,70 @@ def bradley_terry(
     # rounds and the final joins never re-execute the (arbitrarily
     # expensive) upstream match pipeline — the graph.py edge-list
     # discipline applied to the games matrix.
-    pins: list = []
-    wab = _pin(
-        mt.groupBy(F.col("w").alias("a"), F.col("l").alias("b")).agg(
-            F.count(F.lit(1)).alias("wl")
-        ),
-        scope=pins,
-    )
-    # Directed games table: n_ab = wins(a over b) + wins(b over a).
-    g = (
-        wab.select("a", "b", F.col("wl").alias("n"))
-        .unionByName(
-            wab.select(
-                F.col("b").alias("a"), F.col("a").alias("b"), F.col("wl").alias("n")
-            )
+    with pinned() as pins:
+        wab = pin(
+            mt.groupBy(F.col("w").alias("a"), F.col("l").alias("b")).agg(
+                F.count(F.lit(1)).alias("wl")
+            ),
+            scope=pins,
         )
-        .groupBy("a", "b")
-        .agg(F.sum("n").alias("n"))
-    )
-    players = g.select(F.col("a").alias("p")).distinct()
-    wins = players.join(
-        wab.groupBy(F.col("a").alias("p")).agg(F.sum("wl").alias("wc")),
-        "p",
-        "left_outer",
-    ).select("p", F.coalesce("wc", F.lit(0)).cast("long").alias("wins"))
-    gcnt = g.groupBy(F.col("a").alias("p")).agg(F.sum("n").cast("long").alias("games"))
-    n_players = players.count()
-    _check_renorm_bound(n_players, scale, "bradley_terry")
+        # Directed games table: n_ab = wins(a over b) + wins(b over a).
+        g = (
+            wab.select("a", "b", F.col("wl").alias("n"))
+            .unionByName(
+                wab.select(
+                    F.col("b").alias("a"), F.col("a").alias("b"), F.col("wl").alias("n")
+                )
+            )
+            .groupBy("a", "b")
+            .agg(F.sum("n").alias("n"))
+        )
+        players = g.select(F.col("a").alias("p")).distinct()
+        wins = players.join(
+            wab.groupBy(F.col("a").alias("p")).agg(F.sum("wl").alias("wc")),
+            "p",
+            "left_outer",
+        ).select("p", F.coalesce("wc", F.lit(0)).cast("long").alias("wins"))
+        gcnt = g.groupBy(F.col("a").alias("p")).agg(F.sum("n").cast("long").alias("games"))
+        n_players = players.count()
+        _check_renorm_bound(n_players, scale, "bradley_terry")
 
-    s = players.withColumn("s", F.lit(scale).cast("long"))
-    one = F.lit(1).cast("long")
-    for _ in range(iterations):
-        sa = s.select(F.col("p").alias("pa"), F.col("s").alias("s_a"))
-        sb = s.select(F.col("p").alias("pb"), F.col("s").alias("s_b"))
-        d = (
-            g.join(F.broadcast(sa), g.a == sa.pa)
-            .join(F.broadcast(sb), g.b == sb.pb)
-            .select("a", F.expr(f"n * {sq} DIV (s_a + s_b)").alias("c"))
-            .groupBy("a")
-            .agg(F.sum("c").alias("d"))
-        )
-        u = wins.join(d, wins.p == d.a).select(
-            "p", F.greatest(one, F.expr(f"wins * {sq} DIV d")).alias("u")
-        )
-        tot = u.agg(F.sum("u").cast("long").alias("tot"))
-        s = _pin_state(
-            u.withColumn("_k", _zero_key(F.col("p")))
-            .join(F.broadcast(tot.withColumn("_k", _zero_key(F.col("tot")))), "_k")
+        s = players.withColumn("s", F.lit(scale).cast("long"))
+        one = F.lit(1).cast("long")
+        for _ in range(iterations):
+            sa = s.select(F.col("p").alias("pa"), F.col("s").alias("s_a"))
+            sb = s.select(F.col("p").alias("pb"), F.col("s").alias("s_b"))
+            d = (
+                g.join(F.broadcast(sa), g.a == sa.pa)
+                .join(F.broadcast(sb), g.b == sb.pb)
+                .select("a", F.expr(f"n * {sq} DIV (s_a + s_b)").alias("c"))
+                .groupBy("a")
+                .agg(F.sum("c").alias("d"))
+            )
+            u = wins.join(d, wins.p == d.a).select(
+                "p", F.greatest(one, F.expr(f"wins * {sq} DIV d")).alias("u")
+            )
+            tot = u.agg(F.sum("u").cast("long").alias("tot"))
+            s = pin_state(
+                u.withColumn("_k", _zero_key(F.col("p")))
+                .join(F.broadcast(tot.withColumn("_k", _zero_key(F.col("tot")))), "_k")
+                .select(
+                    "p",
+                    F.greatest(
+                        one, F.expr(f"u * {n_players} * {scale} DIV tot")
+                    ).alias("s"),
+                )
+            )
+        out = pin_state(  # eager: materialize BEFORE releasing the wab pin,
+            wins.join(gcnt, "p")  # since wins/gcnt still reference it
+            .join(s, "p")
             .select(
-                "p",
-                F.greatest(
-                    one, F.expr(f"u * {n_players} * {scale} DIV tot")
-                ).alias("s"),
+                F.col("p").alias("player"),
+                "games",
+                "wins",
+                F.col("s").alias("strength_micro"),
             )
         )
-    out = _pin_state(  # eager: materialize BEFORE releasing the wab pin,
-        wins.join(gcnt, "p")  # since wins/gcnt still reference it
-        .join(s, "p")
-        .select(
-            F.col("p").alias("player"),
-            "games",
-            "wins",
-            F.col("s").alias("strength_micro"),
-        )
-    )
-    _release(pins)
     return out
 
 

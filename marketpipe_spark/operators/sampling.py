@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import pin
 from .dedup import _hash64
 
 #: md5_60 yields uniform ints in [0, 2^60)
@@ -278,9 +279,7 @@ def dsir_weights(
     # (measured: 6 Generate subtrees in this entry's physical plan). Pin
     # both shared pre-aggs — (doc,tgt,bucket,m) and the per-doc scores —
     # so the explode runs exactly once (the lm_perplexity precedent).
-    from .dedup import _pin
-
-    inst = _pin(tk.groupBy(id_col, "tgt", "bucket").agg(F.count(F.lit(1)).alias("m")))
+    inst = pin(tk.groupBy(id_col, "tgt", "bucket").agg(F.count(F.lit(1)).alias("m")))
     stats = inst.groupBy("bucket").agg(
         F.sum(F.when(F.col("tgt"), F.col("m")).otherwise(F.lit(0))).alias("ct"),
         F.sum("m").alias("cr"),
@@ -302,7 +301,7 @@ def dsir_weights(
         F.sum("m").alias("n_tokens"),
         F.sum(F.col("m") * F.col("lam_micro")).alias("dsir_micro"),
     )
-    per_doc = _pin(
+    per_doc = pin(
         per_doc.withColumn(
             "avg_micro",
             F.floor(F.col("dsir_micro").cast("double") / F.col("n_tokens")).cast("long"),

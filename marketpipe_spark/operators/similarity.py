@@ -14,41 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-
-def spread(df: DataFrame, key: str, factor: int = 1) -> DataFrame:
-    """Hash-repartition on ``key`` up to cluster parallelism when the input
-    arrives in fewer partitions (e.g. one small parquet file) — CPU-bound
-    operators otherwise run on a single core. At real scale the scan already
-    yields enough splits and this is a no-op.
-
-    Call ONCE at the operator entry point, never inside a helper that gets
-    referenced from several plan branches: hash partitioning is deterministic
-    so one exchange is planned and reused, whereas per-branch round-robin
-    repartitions are nondeterministic, defeat exchange reuse, and recompute
-    the upstream subtree per branch (measured 30×+ slowdowns)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, df[key])
-    return df
-
-
-def spread_on(df: DataFrame, *keys: str) -> DataFrame:
-    """Multi-key :func:`spread` for JOIN inputs whose shuffle is
-    compute-dense but byte-tiny (wedge enumeration, edit-distance pair
-    verification): AQE's byte-based partition coalescing sees a few MB and
-    folds the post-shuffle stage onto ONE task, serializing seconds of
-    per-pair compute (measured: every stage of the triangle wedge join ran
-    1 task at sf0.1 on local[32]). Hash-repartitioning on the join keys
-    with an EXPLICIT partition count is absorbed as the join's required
-    distribution (no extra exchange) and is exempt from AQE coalescing.
-    Same scale guard as :func:`spread`: a no-op once the input already
-    arrives with cluster parallelism."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *[F.col(k) for k in keys])
-    return df
+from ..execution import pin, spread
 
 
 def _dot(x: Column, y: Column) -> Column:
@@ -303,9 +269,7 @@ def kmeans_centroids(
         # re-reads + re-decodes the corpus parquet. Pin the vector frame on
         # executor-local storage (the standard iterative-ML persist) so
         # iterations 2..n read the materialized blocks instead.
-        from .dedup import _pin
-
-        c = _pin(c)
+        c = pin(c)
     for _ in range(n_iter):
         cmat = cents  # closure snapshot for this iteration
 

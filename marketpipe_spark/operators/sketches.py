@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import pin
 from .dedup import _hash64
 
 __all__ = [
@@ -424,14 +425,13 @@ def mg_heavy_hitters_check(df: DataFrame, col: str, k: int = 64) -> DataFrame:
         .groupBy("item")
         .agg(F.sum("cnt").alias("est"))
     )
-    from .dedup import _pin
 
     # `joined` feeds the scalar aggregate AND the flag rollup: unpinned,
     # both upstream corpus passes (exact hash-agg + the MG mapInPandas
     # partial counters) ran once per consumer — 4 Python nodes in
     # heavy_hitter_tokens' plan. The pin is vocabulary-scale; the two
     # remaining corpus passes (exact, MG) are the inherent minimum.
-    joined = _pin(exact.join(est, "item", "left_outer"))
+    joined = pin(exact.join(est, "item", "left_outer"))
     scalars = joined.agg(
         F.sum("true_cnt").alias("_n"), F.sum(F.coalesce("est", F.lit(0))).alias("_mass")
     )

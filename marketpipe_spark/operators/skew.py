@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import pin
+
 
 def salted_join(
     left: DataFrame,
@@ -86,12 +88,11 @@ def hot_key_profile(
     from ..plans.registry import scalar_join
 
     k = F.col(key) if isinstance(key, str) else key
-    from .dedup import _pin
 
     # ``counts`` feeds the scalar total AND the top-k: unpinned, the full
     # scan + key aggregation runs twice. One narrow row per distinct key —
     # pin it.
-    counts = _pin(df.groupBy(k.alias("key")).agg(F.count(F.lit(1)).alias("n")))
+    counts = pin(df.groupBy(k.alias("key")).agg(F.count(F.lit(1)).alias("n")))
     total = counts.agg(F.sum("n").alias("_t"))
     topk = (
         scalar_join(counts, "key", total)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import pin, spread
+
 TOKEN_SPLIT_RE = r"\s+"
 #: Patterns shared verbatim with the DuckDB oracle (valid Java regex + RE2).
 URL_RE = r"https?://[^\s]+"
@@ -135,8 +137,6 @@ def ngram_novelty(
     """
     from pyspark.sql.window import Window as W
 
-    from .similarity import spread
-
     # Gram hashing (md5 in the verification family) is map CPU ahead of
     # any exchange — a coarsely-partitioned input would run it on one
     # core (measured: every stage of this entry ran 1 task at sf0.1).
@@ -192,8 +192,6 @@ def curate_corpus(
     """
     from .sampling import with_split
 
-    from .dedup import _pin
-
     # NOT spread (measured, r11): 0.86 -> 0.92 s warm median with an
     # id_col spread — the regex clean at this corpus size doesn't
     # amortize the exchange (see the textclean spread split: only the
@@ -202,7 +200,7 @@ def curate_corpus(
     # unpinned, the regex clean (URL strip / email mask / collapse — the
     # pipeline's priciest map pass) runs over the corpus once per
     # consumer. Pin the cleaned rows so it runs once.
-    cleaned = _pin(clean_documents(df, text_col).drop("n_urls", "n_emails"))
+    cleaned = pin(clean_documents(df, text_col).drop("n_urls", "n_emails"))
     sig = repetition_signals(
         cleaned.select(id_col, F.col("clean_text").alias("text")), id_col, "text"
     )
@@ -258,11 +256,10 @@ def ngram_contamination(
     saturate.
     """
     from .dedup import _hash64
-    from .similarity import spread
 
     # Gram hashing is the CPU of this operator and runs BEFORE any exchange:
     # if the corpus arrives in fewer partitions than the cluster has cores
-    # (one small parquet file), it would run single-threaded. spread() is a
+    # (one small parquet file), it would run single-threaded. spread is a
     # no-op once the scan yields enough splits (the 100 TB case). The train
     # side only contributes gram hashes — it need not carry id_col, so it
     # spreads on text_col (high-cardinality, always present).
@@ -276,9 +273,7 @@ def ngram_contamination(
     # test corpus is re-tokenized, re-exploded and re-deduped once per
     # consumer. The test side is the small side by assumption, so the pin
     # is bounded (the minhash sh_base precedent).
-    from .dedup import _pin
-
-    test_g = _pin(ngram_hashes(test, id_col, text_col, n, family))
+    test_g = pin(ngram_hashes(test, id_col, text_col, n, family))
     if prefilter_bits is not None:
         m = 1 << prefilter_bits
         buckets = test_g.select(F.pmod(F.col("gram_h"), F.lit(m)).alias("_bkt")).distinct()
@@ -340,7 +335,6 @@ def duplicated_spans(
     had.
     """
     from .dedup import _hash64
-    from .similarity import spread
 
     # Span hashing is map-side CPU ahead of any exchange — redistribute a
     # coarsely-partitioned input first (no-op when the scan gives splits).
@@ -362,9 +356,7 @@ def duplicated_spans(
     # Two consumers (span-frequency counts + the join back): pin the
     # two-longs-per-row span table instead of re-running the windowed
     # hashing, which costs more than everything downstream combined.
-    from .dedup import _pin
-
-    win = _pin(win)
+    win = pin(win)
     # "Held by >= 2 distinct documents" is a BINARY predicate, so
     # min(id) != max(id) answers it with plain partial-aggregating min/max
     # instead of countDistinct's expand machinery (r10: 0.87x, rows
@@ -529,7 +521,6 @@ def boilerplate_strip(
     left-anti-shaped join keyed by high-cardinality text. Reconstruction
     is one shuffle on the unique doc id.
     """
-    from .dedup import _pin
 
     # NOT spread (measured, r11): 0.73 -> 0.97 s warm median with an
     # id_col spread — same cheap-segmentation argument as segment_dedup.
@@ -539,7 +530,7 @@ def boilerplate_strip(
     # segment explode runs once per consumer. The pin holds the segmented
     # corpus (its rows ARE the operator's working set) on executor-local
     # disk and saves the second full segmentation pass.
-    segs = _pin(
+    segs = pin(
         df.select(F.col(id_col), t.alias("t"))
         .select(
             id_col,
@@ -612,7 +603,6 @@ def decontaminate_spans(
     prefilter of :func:`ngram_contamination` composes in front unchanged.
     """
     from .dedup import _hash64
-    from .similarity import spread
 
     toks_col = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
     # NOT pinned (measured): materializing the tokenized train corpus (one
@@ -682,13 +672,11 @@ def token_psi(
         tok = F.explode(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)).alias("token")
         return df.select(tok).groupBy("token").agg(F.count(F.lit(1)).cast("long").alias(name))
 
-    from .dedup import _pin
-
     # `comb` feeds the top-k probe AND the bucket rollup: unpinned, BOTH
     # sides' corpus explode + hash-agg ran twice (4 scans in
     # token_drift_psi's physical plan). The pin is the vocabulary-scale
     # joined count table — bounded while the avoided pass is corpus-scale.
-    comb = _pin(
+    comb = pin(
         counts(a, side_a)
         .join(counts(b, side_b), "token", "full_outer")
         .select(

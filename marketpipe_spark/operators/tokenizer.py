@@ -36,6 +36,7 @@ from collections import Counter, defaultdict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import spread
 from .dedup import TOKEN_SPLIT_RE
 
 #: End-of-word sentinel (Sennrich's '</w>'): keeps merges from crossing
@@ -51,7 +52,6 @@ _WS_RE = re.compile(r"\s+", re.ASCII)
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """``(word, freq)`` over the lower-cased, whitespace-split corpus — one
     explode + map-side-combined groupBy; output is vocabulary-sized."""
-    from .similarity import spread
 
     docs = spread(docs, text_col)
     w = F.explode(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)).alias("word")
@@ -164,8 +164,6 @@ def bpe_token_stats(
     compute it — tests pin its properties instead.
     """
     import pandas as pd
-
-    from .similarity import spread
 
     ranks = {p: i for i, p in enumerate(merges)}
 

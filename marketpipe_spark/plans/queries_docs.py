@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import pin, pin_all, spread
 from .registry import register, t
 
 #: Stopword alternation shared by Spark and the DuckDB oracle (both engines'
@@ -414,8 +415,6 @@ SELECT COUNT(*) AS n_test, CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_contaminated
 def q_contamination_check(spark, sf_dir):
     from ..operators.sampling import with_split
 
-    from ..operators.dedup import _pin
-
     d = t(spark, sf_dir, "documents")
     s = with_split(d, {"train": 0.9, "val": 0.05, "test": 0.05}, salt="split").withColumn(
         "fp", F.md5(F.encode(F.lower(F.trim(F.col("text"))), "UTF-8"))
@@ -424,7 +423,7 @@ def q_contamination_check(spark, sf_dir):
     # corpus scan + split-hash + fingerprint md5 runs ONCE instead of once
     # per side (the split predicate is hash-derived and cannot push down,
     # so each unpinned side paid a full scan + full split-hash pass).
-    sf = _pin(s.select("split", "fp"))
+    sf = pin(s.select("split", "fp"))
     train = sf.filter(F.col("split") == "train").select("fp").distinct().withColumn("_hit", F.lit(1))
     test = sf.filter(F.col("split") == "test")
     # The train side is the distinct fingerprints of ~90% of the corpus —
@@ -661,8 +660,6 @@ LIMIT 20
 def q_cm_top_tokens(spark, sf_dir):
     from ..operators.sketches import cm_estimate, cm_sketch
 
-    from ..operators.dedup import _pin
-
     d = t(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)).alias("tok")
@@ -674,7 +671,7 @@ def q_cm_top_tokens(spark, sf_dir):
     # sketch cell is bit-equal while the sketch input shrinks from
     # corpus-scale to vocabulary-scale. truth's other consumers (estimate
     # keys + final join) read the pin too (was 5 scans / 3 explodes).
-    truth = _pin(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("true_cnt")))
+    truth = pin(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("true_cnt")))
     sk = cm_sketch(
         truth, "tok", depth=_CM_DEPTH, width=_CM_WIDTH, hash_family="md5_60",
         weight="true_cnt",
@@ -821,13 +818,12 @@ def q_tfidf_top_terms(spark, sf_dir):
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)).alias("token"),
     )
-    from ..operators.dedup import _pin
 
     # `tf` feeds two consumers (the df rollup and the scored probe side);
     # unpinned, each re-runs the corpus-wide token explode + pre-agg from
     # the parquet text. Pin the (doc,token,tf) inverted index — it is the
     # shared intermediate of the whole query (lm_perplexity precedent).
-    tf = _pin(tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")))
+    tf = pin(tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")))
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     # Fixed-point micro-score: ln() is libm-dependent (JVM vs DuckDB differ
@@ -904,8 +900,6 @@ def q_bm25_search(spark, sf_dir):
     # token list without a corpus-wide explode + shuffle (the explode branch
     # below only feeds the term-filtered tf, which DuckDB and Catalyst both
     # prune to the IN-list before grouping).
-    from ..operators.dedup import _pin_parallel
-
     # `dl` feeds two consumers (the avgdl/n_docs stats and the per-doc
     # length join): pinned, the parquet text column — the expensive column
     # at scale — is read and tokenized for lengths once, and the pin is two
@@ -914,7 +908,7 @@ def q_bm25_search(spark, sf_dir):
     # is at most |terms| rows per doc, so it is bounded. The two pins are
     # independent corpus passes — overlap their jobs (guide §2.6) so the
     # second pass back-fills the first one's straggler tail.
-    dl, tf = _pin_parallel(
+    dl, tf = pin_all(
         d.select(
             "doc_id",
             F.size(F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT_RE)).cast("long").alias("dl"),
@@ -1211,7 +1205,6 @@ def q_lm_perplexity(spark, sf_dir):
         )
         .select("doc_id", "b.w1", "b.w2")
     )
-    from ..operators.dedup import _pin
 
     # `inst` feeds THREE consumers (the scored probe side, c12, c1); without
     # a pin each consumer re-runs the corpus-scale bigram explode + pre-agg
@@ -1219,7 +1212,7 @@ def q_lm_perplexity(spark, sf_dir):
     # physical plan — the explode is the dominant cost at scale and ran 3x).
     # Pinning the (doc,w1,w2,m) pre-agg — already shrunk to bigram-type
     # cardinality — computes it once (the duplicated_spans precedent).
-    inst = _pin(bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("m")))
+    inst = pin(bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("m")))
     # Model counts are vocabulary-scale (V and V² bounded), not corpus-scale:
     # both roll up from `inst`, which the (doc,w1,w2) pre-agg has already
     # shrunk, and both get map-side partials.
@@ -2016,10 +2009,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     from ..operators.sketches import bloom_bits, bloom_member
     from ..operators.textclean import ngram_hashes
 
-    from ..operators.dedup import _pin_parallel
-
     d = t(spark, sf_dir, "documents")
-    from ..operators.similarity import spread
 
     # 5-gram build + md5 hashing is map CPU ahead of any exchange; the
     # single-row-group scan ran the whole train-side pass on one core
@@ -2036,7 +2026,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     # The two sides are independent passes over disjoint splits — overlap
     # their pin jobs (guide §2.6): the small test pass back-fills the
     # train pass's straggler tail instead of waiting for it.
-    train_g, test_g = _pin_parallel(
+    train_g, test_g = pin_all(
         ngram_hashes(s.filter(F.col("split") == "train"), "doc_id", "text", 5, "md5_60")
         .select("gram_h")
         .distinct(),
@@ -2267,7 +2257,6 @@ def q_source_overlap(spark, sf_dir):
     from ..operators.dedup import _hash64
 
     d = t(spark, sf_dir, "documents").where(F.col("source").isNotNull())
-    from ..operators.similarity import spread
 
     # 3-gram explode + md5 is map CPU ahead of the distinct's exchange;
     # the single-row-group scan ran it on one core (r11 census: every
@@ -2276,12 +2265,10 @@ def q_source_overlap(spark, sf_dir):
     d = spread(d, "doc_id")
     from ..operators.textclean import _gram_text
 
-    from ..operators.dedup import _pin
-
     # `sg` feeds the per-source sizes AND the pair enumeration: unpinned,
     # the corpus 3-gram explode + distinct ran twice. The pin is the
     # distinct (source, gram_h) set — far smaller than the gram stream.
-    sg = _pin(
+    sg = pin(
         d.select(
             "source", F.explode(_gram_text(F.col("text"), 3)).alias("gram")
         )

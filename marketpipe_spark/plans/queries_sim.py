@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..execution import spread
 from ..operators.dedup import minhash_near_duplicates, ngram_jaccard_pairs, simhash_near_duplicates
 from ..operators.multimodal import attach_payload, extract_media_meta
 from ..operators.similarity import cosine_topk, cosine_topk_blocked, ivf_topk, lsh_topk, pq_topk
@@ -556,7 +557,6 @@ def _media_payload_expr():
 )
 def q_media_dimensions(spark, sf_dir):
     docs = t(spark, sf_dir, "documents").select("doc_id")
-    from ..operators.similarity import spread
 
     payloads = spread(docs, "doc_id").withColumn("payload", _media_payload_expr())
     return extract_media_meta(payloads).select("doc_id", "format", "width", "height")
@@ -705,7 +705,6 @@ def _media_png_full_payload_expr():
 )
 def q_media_resize(spark, sf_dir):
     from ..operators.multimodal import resize_media
-    from ..operators.similarity import spread
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
     payloads = spread(docs, "doc_id").withColumn(
@@ -800,7 +799,6 @@ def _audio_wav_payload_expr():
 )
 def q_audio_resample(spark, sf_dir):
     from ..operators.multimodal import resample_audio
-    from ..operators.similarity import spread
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
     payloads = spread(docs, "doc_id").withColumn(
@@ -1343,7 +1341,6 @@ def _wav_payload_expr():
 )
 def q_wav_audio_meta(spark, sf_dir):
     from ..operators.multimodal import extract_audio_meta
-    from ..operators.similarity import spread
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
     payloads = spread(docs, "doc_id").withColumn("payload", _wav_payload_expr())
@@ -1415,7 +1412,6 @@ def _mp4_payload_expr():
 )
 def q_mp4_video_meta(spark, sf_dir):
     from ..operators.multimodal import extract_video_meta
-    from ..operators.similarity import spread
 
     docs = t(spark, sf_dir, "documents").select("doc_id")
     payloads = spread(docs, "doc_id").withColumn("payload", _mp4_payload_expr())

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..execution import pin
 from ..operators.skyline import skyline2d, skyline2d_sql
 from .registry import register, t
 
@@ -73,14 +74,12 @@ SELECT c_nationkey, c_custkey, bal_cents, n_orders FROM sky
     tags=("skyline", "window", "joins"),
 )
 def q_nation_customer_skyline(spark, sf_dir):
-    from ..operators.dedup import _pin
-
     c = t(spark, sf_dir, "customer")
     o = t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     # skyline2d consumes its input twice (distinct points + the semi join
     # back onto the source rows): unpinned, the customer⋈orders join + agg
     # runs once per consumer. One narrow row per customer — pin it.
-    src = _pin(
+    src = pin(
         c.select("c_nationkey", "c_custkey", "c_acctbal")
         .join(o, c.c_custkey == o.o_custkey, "left_outer")
         .groupBy("c_nationkey", "c_custkey", "c_acctbal")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import pin
 from ..functions import NS_PER_DAY, NS_PER_SEC
 from ..operators.resample import resample_intraday
 from .registry import SQL_BARS, bars, register, scalar_join, t, ts_ns_expr
@@ -417,14 +418,13 @@ FROM q GROUP BY r_q, f_q, m_q
 
 @register("rfm_segments", SQL_RFM, doc="RFM quartile segmentation (threshold-bucketed, no global-order window)", tags=("analytics", "agg"))
 def q_rfm_segments(spark, sf_dir):
-    from ..operators.dedup import _pin
     from .registry import scalar_join
 
     ev = t(spark, sf_dir, "events")
     # The per-user RFM frame feeds the percentile-threshold aggregate AND
     # the bucketing join: unpinned, the full events scan + hash agg runs
     # twice. One narrow row per user — pin it.
-    u = _pin(
+    u = pin(
         ev.groupBy("user_id").agg(
             F.max(ts_ns_expr(ev)).alias("last_ns"),
             F.count(F.lit(1)).alias("freq"),
@@ -549,14 +549,13 @@ SQL_KLL_VALUE_QUANTILES = "\nUNION ALL\n".join(
     tags=("sketch", "percentile"),
 )
 def q_kll_value_quantiles(spark, sf_dir):
-    from ..operators.dedup import _pin
     from ..operators.sketches import kll_rank_check
 
     # The single-column value frame feeds THREE consumers (sketch build,
     # true-rank count, exact percentile agg): unpinned, each re-scans the
     # events parquet. Pin the narrow column once; the pin keeps the scan's
     # partition layout, so the layout-dependent sketch state is unchanged.
-    ev = _pin(t(spark, sf_dir, "events").select("value"))
+    ev = pin(t(spark, sf_dir, "events").select("value"))
     check = kll_rank_check(ev, "value", _KLL_PROBS, k=256, bound=0.05)
     exact = ev.agg(
         *[F.expr(f"percentile(value, {p})").alias(f"e{i}") for i, p in enumerate(_KLL_PROBS)]
@@ -718,15 +717,13 @@ FROM s
 
 @register("return_correlations", SQL_RETURN_CORRELATIONS, doc="pairwise Pearson correlation of 5m returns (bucket equi-join, exact power sums)", tags=("agg", "ta", "join"))
 def q_return_correlations(spark, sf_dir):
-    from ..operators.dedup import _pin
-
     r5 = _r5(spark, sf_dir)
     wo = W.partitionBy("symbol").orderBy("ts_ns")
     cc = F.floor(F.col("close") * F.lit(100)).cast("long")
     # ``rx`` is BOTH sides of the pair self-join: unpinned, the scan + 5m
     # resample + return window runs once per side. Narrow (symbol, ts_ns,
     # x) rows at the 5m grain — pin so the upstream runs once.
-    rx = _pin(
+    rx = pin(
         r5.select("symbol", "ts_ns", (cc - F.lag(cc).over(wo)).alias("x")).filter(
             F.col("x").isNotNull()
         )
@@ -1260,12 +1257,11 @@ def q_ranksum_returns(spark, sf_dir):
         (F.col("ts_ns") - F.col("ts_ns") % F.lit(NS_PER_DAY)).alias("day"),
     ).agg(F.expr("CAST(FLOOR(max_by(close, ts_ns) * 1e6) AS BIGINT)").alias("cm"))
     wo = W.partitionBy("symbol").orderBy("day")
-    from ..operators.dedup import _pin
 
     # ``rr`` feeds the distinct-value histogram AND the rank join below:
     # unpinned, the daily-close scan + agg + return window runs once per
     # consumer. One narrow (symbol, rm) row per symbol-day — pin it.
-    rr = _pin(
+    rr = pin(
         rd.select(
             "symbol", (F.col("cm") - F.lag("cm").over(wo)).alias("rm")
         ).where(F.col("rm").isNotNull())
@@ -1278,7 +1274,7 @@ def q_ranksum_returns(spark, sf_dir):
     # Allow-listed in tests/test_plan_hygiene.py global-window inventory;
     # if the grain ever drops below daily, replace with a two-phase
     # bucketed scan (fixed-width rm buckets: per-bucket cumsum + bucket
-    # offsets) before widening this allowance.
+    # offsets) before loosening this allowance.
     wg = W.orderBy("rm").rowsBetween(W.unboundedPreceding, -1)
     rx = hist.select(
         "rm",

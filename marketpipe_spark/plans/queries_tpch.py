@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..execution import spread
 from .registry import dim_join, register, t, ts_ns_expr, ts_range_pred
 
 
@@ -45,11 +46,9 @@ GROUP BY l_returnflag, l_linestatus
 
 @register("pricing_summary", SQL_PRICING_SUMMARY, doc="TPC-H Q1-shape wide aggregate (flagship)", tags=("agg", "core"))
 def q_pricing_summary(spark, sf_dir):
-    from .registry import widen
-
-    # All sums are exact decimals (order-independent), so widening the
-    # partial-agg stage past a coarse scan is parity-safe; no-op at scale.
-    l = widen(
+    # Keyless (round-robin) spread of the partial-agg stage: all sums are
+    # exact decimals, so the order-insensitive rule holds.
+    l = spread(
         t(spark, sf_dir, "lineitem").filter(
             F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp_ntz")
         )
@@ -92,8 +91,6 @@ LIMIT 10
 
 @register("top_customers", SQL_TOP_CUSTOMERS, doc="join + top-k revenue per customer", tags=("join", "topk"))
 def q_top_customers(spark, sf_dir):
-    from ..operators.similarity import spread
-
     # Spread the fact scan on the PRE-AGG key: a coarse scan (one parquet
     # row group = one task) otherwise fuses the per-order partial agg into
     # a single-core stage. Hash partitioning on l_orderkey is deterministic
@@ -149,8 +146,6 @@ GROUP BY r_name, n_name
 
 @register("regional_revenue", SQL_REGIONAL_REVENUE, doc="star join over 5 tables, broadcast dims", tags=("join", "agg"))
 def q_regional_revenue(spark, sf_dir):
-    from ..operators.similarity import spread
-
     # Spread on the pre-agg key — see q_top_customers (measured 0.80x).
     l = spread(t(spark, sf_dir, "lineitem"), "l_orderkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -375,8 +370,6 @@ GROUP BY ROLLUP (r_name, n_name)
 
 @register("revenue_rollup", SQL_REVENUE_ROLLUP, doc="region→nation revenue ROLLUP with grouping markers (subtotals + grand total)", tags=("agg", "rollup"))
 def q_revenue_rollup(spark, sf_dir):
-    from ..operators.similarity import spread
-
     # Spread on the pre-agg key — see q_top_customers (measured 0.79x).
     l = spread(t(spark, sf_dir, "lineitem"), "l_orderkey")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -511,7 +504,7 @@ def q_orders_cube(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-3 relational widening: the classic TPC-H shapes the `query` surface
+# Round-3 relational breadth: the classic TPC-H shapes the `query` surface
 # must handle (reference cli/query.py passes arbitrary SQL). Each is the
 # canonical plan for its shape at scale: filters pushed to the scan, fact
 # pre-aggregation before joins where it shrinks shuffles, broadcast dims.
@@ -674,8 +667,6 @@ LIMIT 20
 
 @register("big_orders", SQL_BIG_ORDERS, doc="TPC-H Q18 shape: HAVING pre-agg shrinks fact before order/customer joins", tags=("join", "agg", "topk"))
 def q_big_orders(spark, sf_dir):
-    from ..operators.similarity import spread
-
     # Spread on the pre-agg key — see q_top_customers (measured 0.84x).
     l = spread(t(spark, sf_dir, "lineitem"), "l_orderkey")
     o = t(spark, sf_dir, "orders")

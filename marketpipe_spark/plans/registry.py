@@ -100,7 +100,7 @@ def ts_range_pred(ev: DataFrame, lo_ns: int, hi_ns: int, colname: str = "ts") ->
     Exactness: testdata instants are µs-precision, and the µs-quantized
     ``ts_ns`` lies in [lo, hi] iff the raw value does for µs-multiple
     bounds (long layout: ``ts%1000==0`` after quantization, so the +999
-    widening on ``hi`` admits no extra rows).
+    slack on ``hi`` admits no extra rows).
     """
     dt = dict(ev.dtypes)[colname]
     c = F.col(colname)
@@ -270,22 +270,6 @@ def dim_join(
     if always_broadcast or plan_size_bytes(dim) <= DIM_BROADCAST_MAX_BYTES:
         dim = F.broadcast(dim)
     return fact.join(dim, on, how)
-
-
-def widen(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a coarsely-split scan up to cluster
-    parallelism so CPU-heavy map-side work (wide decimal aggregates)
-    doesn't run on a handful of tasks. Strictly a coarse-input mitigation:
-    when the scan already yields at least half the cluster's parallelism
-    (any real lake at scale), this is a NO-OP — no exchange is added.
-    Round-robin is retry-safe (Spark sorts before repartitioning) and only
-    valid for order-insensitive consumers: exact decimal/integer
-    aggregates, never float sums."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 <= target:
-        return df.repartition(target)
-    return df
 
 
 def scalar_join(df: DataFrame, keycol: str, scalar: DataFrame) -> DataFrame:

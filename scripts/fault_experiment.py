@@ -1,6 +1,6 @@
 """Executor-loss fault experiment: the reliability axis of MP_PIN_MODE.
 
-`_pin`/`_pin_state` docstrings make three claims:
+The `execution.pin`/`pin_state` docstrings make three claims:
 
 - ``local``: localCheckpoint blocks die with their executor (lineage
   truncated — nothing to recompute from), so a mid-loop kill can fail the

@@ -1,12 +1,12 @@
 """Execution probe: per-round stage/shuffle cost of the iterative graph
 loops under the two pin modes.
 
-The loops pin their loop-invariant edge frames (`_pin` / `_pin_keyed`):
+The loops pin their loop-invariant edge frames (`pin` / `pin_keyed`):
 - default (`MP_PIN_MODE=local`): localCheckpoint — cheapest, but the
   checkpoint surfaces with UNKNOWN outputPartitioning, so when the
   node-state side is above the broadcast gate every round's join
   re-exchanges the BIG edge side too;
-- `MP_PIN_MODE=persist`: `_pin_keyed` repartitions on the per-round join
+- `MP_PIN_MODE=persist`: `pin_keyed` repartitions on the per-round join
   key before a DISK_ONLY persist, which KEEPS outputPartitioning — the
   per-round exchange on the edge side disappears.
 
@@ -16,7 +16,7 @@ final explain. Instead this counts EXECUTED STAGES per additional round:
 each shuffle exchange terminates a stage, so (stages at R+2 rounds −
 stages at R+1 rounds) is the per-round stage cost, measured from the
 scheduler, not the plan string. The broadcast gate is forced OFF
-(`MP_BROADCAST_STATE_MAX_NODES=0`) — the above-gate shuffle regime is
+(`execution.BROADCAST_STATE_MAX_NODES = 0`) — the above-gate shuffle regime is
 where a 100 TB graph lives and where the pin mode matters.
 
 Run each mode in a separate process:
@@ -35,8 +35,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-os.environ["MP_BROADCAST_STATE_MAX_NODES"] = "0"  # force the shuffle path
 
 
 def executed_stages(spark, group: str, fn) -> int:
@@ -66,9 +64,11 @@ def executed_stages(spark, group: str, fn) -> int:
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from marketpipe_spark import execution
     from marketpipe_spark.operators import graph
     from marketpipe_spark.session import get_spark
 
+    execution.BROADCAST_STATE_MAX_NODES = 0  # force the shuffle path
     mode = os.environ.get("MP_PIN_MODE", "local")
     spark = get_spark(f"graph-plan-probe-{mode}")
     spark.sparkContext.setLogLevel("ERROR")

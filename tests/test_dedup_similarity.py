@@ -683,7 +683,7 @@ def test_setsim_prefix_filter_prunes_candidate_volume(spark):
     postings than the full inverted index on a clustered corpus."""
     from pyspark.sql import functions as F
 
-    from marketpipe_spark.operators.dedup import _hash64, _pin, with_shingles
+    from marketpipe_spark.operators.dedup import _hash64, with_shingles
 
     rows = [(i, " ".join(f"tok{(i * 7 + j) % 40}" for j in range(30))) for i in range(80)]
     df = spark.createDataFrame(rows, "doc_id long, text string")

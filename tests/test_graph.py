@@ -312,6 +312,17 @@ def test_pin_modes_all_match_and_release(spark, monkeypatch, tmp_path):
     # clean; the scoped _pin/_pin_keyed DISK_ONLY frames are ours.)
     leaked = disk_only_rdds() - pre_existing
     assert not leaked, f"DISK_ONLY pins leaked after loop operators: {leaked}"
+    # Error paths release too: pagerank_weighted's weight probe raises
+    # after its edge pin exists.
+    import pytest
+
+    from marketpipe_spark.operators.graph import pagerank_weighted
+
+    bad = spark.createDataFrame([(1, 2, 0), (2, 1, 3)], "src long, dst long, w long")
+    with pytest.raises(ValueError, match="positive"):
+        pagerank_weighted(bad, iterations=1)
+    leaked = disk_only_rdds() - pre_existing
+    assert not leaked, f"DISK_ONLY pins leaked on the error path: {leaked}"
 
     ckpt = tmp_path / "ckpt"
     monkeypatch.setenv("MP_PIN_MODE", "reliable")

@@ -234,3 +234,38 @@ def test_global_window_inventory_is_allowlisted():
         "New unpartitioned windows must be reviewed for a cardinality bound "
         "and added here explicitly."
     )
+
+
+def test_execution_policy_lives_in_one_module():
+    """Partition probes and pin release belong to ``execution.py``: no other
+    module may touch ``.rdd`` (the coarse-input guard is ``execution.coarse``
+    / ``spread``), and no module may free pins by hand with a
+    ``_release(...)`` call or a ``pins: list`` scope — release goes through
+    ``execution.pinned()``, which also covers the error paths. Spark-free
+    AST scan of the whole package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "marketpipe_spark"
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = str(p.relative_to(pkg.parent))
+        for node in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "rdd"
+                and p.name != "execution.py"
+            ):
+                offenders.append(f"{rel}:{node.lineno} .rdd")
+            elif isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "_release"
+                or getattr(node.func, "attr", None) == "_release"
+            ):
+                offenders.append(f"{rel}:{node.lineno} _release(")
+            elif (
+                isinstance(node, ast.AnnAssign)
+                and getattr(node.target, "id", None) == "pins"
+                and "list" in ast.unparse(node.annotation)
+            ):
+                offenders.append(f"{rel}:{node.lineno} pins: list")
+    assert not offenders, f"execution policy outside execution.py: {offenders}"

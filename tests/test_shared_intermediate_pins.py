@@ -1,7 +1,7 @@
 """Shared-intermediate pins: multi-consumer subtrees must evaluate ONCE.
 
 Round-10 optimization (guide §2.4 "remove shuffles/passes outright"): a
-frame feeding several plan branches is materialized (``_pin``) so lazy
+frame feeding several plan branches is materialized (``execution.pin``) so lazy
 evaluation cannot re-run its corpus-scale upstream (explode / signature
 aggregation / Arrow projection) once per consumer. These tests pin the
 PLAN SHAPE: after the fix, the expensive upstream lives inside the pinned
@@ -117,14 +117,14 @@ def test_ngram_contamination_single_test_tokenization(spark):
 
 
 def test_pin_parallel_same_results_and_pinned(spark):
-    """_pin_parallel must return PINNED frames (Scan ExistingRDD) with
+    """pin_all must return PINNED frames (Scan ExistingRDD) with
     row-identical contents to the inputs, in input order — overlapping the
     pin jobs (guide §2.6) may not change what is pinned."""
-    from marketpipe_spark.operators.dedup import _pin_parallel
+    from marketpipe_spark.execution import pin_all
 
     a = spark.range(100).selectExpr("id", "id * 2 AS x")
     b = spark.range(50).selectExpr("id", "id + 7 AS y")
-    pa, pb = _pin_parallel(a, b)
+    pa, pb = pin_all(a, b)
     for pinned in (pa, pb):
         plan = pinned._jdf.queryExecution().executedPlan().toString()
         assert "Scan ExistingRDD" in plan, plan
@@ -137,9 +137,9 @@ def test_pin_parallel_off_mode_is_identity(spark, monkeypatch):
     no threads, no jobs — so the zero-jobs-at-build hygiene gate stays
     sharp for builders that use it."""
     monkeypatch.setenv("MP_PIN_MODE", "off")
-    from marketpipe_spark.operators.dedup import _pin_parallel
+    from marketpipe_spark.execution import pin_all
 
     a = spark.range(10)
     b = spark.range(20)
-    out = _pin_parallel(a, b)
+    out = pin_all(a, b)
     assert out[0] is a and out[1] is b
